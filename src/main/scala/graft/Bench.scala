@@ -1,46 +1,39 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.tools.Probe
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the JVM paths shared by every query (parquet reader, codegen,
-    // shuffle machinery) so the first timed query isn't charged for them
-    spark.read.parquet(s"$sfDir/region.parquet")
-      .groupBy("r_name").count().count()
-    def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          false
-        }
+    // the session stops before anything prints, so no Spark shutdown
+    // chatter can land after the JSON line: the LAST line of output is
+    // parsed as the result
+    val (results, top25, pass2) = Probe.withSession("WARN") { spark =>
+      // warm the JVM paths shared by every query (parquet reader, codegen,
+      // shuffle machinery) so the first timed query isn't charged for them
+      Probe.warm(spark, sfDir)
       // -1 marks a failed query (visibly, instead of reporting its
       // time-to-exception as a healthy measurement)
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      def timeOne(name: String, fn: (SparkSession, String) => DataFrame): Double =
+        Probe.time(s"[bench] $name")(fn(spark, sfDir)).fold(-1.0)(_._1)
+      val byName = SparkEntry.queries
+      // deterministic order: round-over-round per-query times stay comparable
+      val results = byName.toSeq.sortBy(_._1).map { case (name, fn) =>
+        name -> timeOne(name, fn)
+      }
+      // Contention self-defense: shared-host runs have recorded uniformly
+      // ~2.4x-inflated wall times two rounds running (BENCH_r8/r9 vs
+      // immediate same-binary reruns). A SECOND pass over the heaviest 25
+      // queries lets the artifact itself distinguish host contention from
+      // a plan regression: a contended first pass shows pass2 << pass1
+      // (high contention_ratio) while a real regression reproduces in
+      // both passes. The reported per-query times are min(pass1, pass2) —
+      // the best observation is the closest to the true cost.
+      val top25 = results.filter(_._2 >= 0).sortBy(-_._2).take(25)
+      val pass2 = top25.map { case (name, _) => name -> timeOne(name, byName(name)) }.toMap
+      (results, top25, pass2)
     }
-    val byName = SparkEntry.queries
-    // deterministic order: round-over-round per-query times stay comparable
-    val results = byName.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> timeOne(name, fn)
-    }
-    // Contention self-defense: driver-host runs have recorded uniformly
-    // ~2.4x-inflated wall times two rounds running (BENCH_r8/r9 vs
-    // immediate same-binary reruns). A SECOND pass over the heaviest 25
-    // queries lets the artifact itself distinguish host contention from
-    // a plan regression: a contended first pass shows pass2 << pass1
-    // (high contention_ratio) while a real regression reproduces in
-    // both passes. The reported per-query times are min(pass1, pass2) —
-    // the best observation is the closest to the true cost.
-    val top25 = results.filter(_._2 >= 0).sortBy(-_._2).take(25)
-    val pass2 = top25.map { case (name, _) => name -> timeOne(name, byName(name)) }.toMap
     val heaviest = top25.map { case (name, t1) =>
       val t2 = pass2(name)
       name -> (if (t2 >= 0) math.min(t1, t2) else t1)
@@ -68,9 +61,6 @@ object Bench {
     val p1Top = top25.map(_._2).sum
     val p2Top = top25.map { case (n, t1) => val t2 = pass2(n); if (t2 >= 0) t2 else t1 }.sum
     val ratio = if (p2Top > 0) p1Top / p2Top else 1.0
-    // stop() first so no Spark shutdown chatter can land after the JSON
-    // line — the driver parses the LAST line of output as the result
-    spark.stop()
     println(s"[bench-full] ${jmap(results)}")
     println(s"[bench-pass2] ${jmap(pass2.toSeq.sortBy(_._1))}")
     println(

@@ -343,25 +343,6 @@ object Graph {
     sP
   }
 
-  /** Plan-audit hook: ONE [[pageRankConverged]] round (step ⋈ previous
-    * rank) built exactly as the loop builds it, against an RDD-rebased
-    * rank frame — what `plans/r20/pagerank_round_{before,after}.txt`
-    * explain. No persist, no action; probe-only.
-    */
-  private[graft] def probeRankRound(adj: DataFrame): DataFrame = {
-    val adjP = adj
-    val nodes = nodesOf(adjP)
-    val nP = nodes.persist(); nP.count(): Unit
-    val bc = rankBroadcast(adjP, nP.count())
-    val r0 = nP.withColumn("rank_micro", lit(1000000L)).persist()
-    r0.count(): Unit
-    val rCut = adj.sparkSession.createDataFrame(r0.rdd, r0.schema)
-    rCut
-      .select(col("node"), col("rank_micro").as("__prev"))
-      .join(bc(rankContrib(adjWithDeg(adjP), rCut, bc)), Seq("node"), "left")
-      .select(col("node"), rankOf(col("__in")).as("rank_micro"), col("__prev"))
-  }
-
   /** Result of a convergence-looped rank computation: the final rank
     * frame (persisted — caller unpersists), the number of iterations
     * actually executed, and the last step's max per-node rank change.

@@ -15,13 +15,16 @@ import org.apache.spark.sql.functions._
   *     .filter('denies =!= 0)
   *
   * This plans as partial HashAggregate → Exchange hashpartitioning(user)
-  * → session merge → final HashAggregate: the exact incremental-agg +
-  * accumulator-merge structure of the reference
-  * (`AggregateDeniedCounts.java:31-33`), with one shuffle, map-side
-  * combine, and per-session state of a single long — no buffered rows.
-  * The same function works on batch and streaming inputs (Spark's
-  * unified API); on streams, call `withWatermark` upstream and run in
-  * Append mode.
+  * → Sort → MergingSessions → final HashAggregate, with one shuffle and
+  * per-session state of a single sum — no buffered rows. The partial
+  * aggregate does not combine map-side: it keys on each row's own
+  * `[ts, ts + gap]` window, so it emits one row per input row (only
+  * rows with the same user and window fold). Sessions are formed only in
+  * `MergingSessions`, after the exchange and the (user, start) sort,
+  * which is where the reference's accumulator merge
+  * (`AggregateDeniedCounts.java:31-33`) happens. The same function works
+  * on batch and streaming inputs (Spark's unified API); on streams, call
+  * `withWatermark` upstream and run in Append mode.
   */
 object Sessionize {
 
@@ -47,36 +50,26 @@ object Sessionize {
       denied: Column,
       weight: Column
   ): DataFrame =
-    events
-      .groupBy(session_window(col(timeCol), gap).as("session"), col(keyCol))
-      .agg(sum(when(denied, weight).otherwise(lit(0))).as("denies"))
-      .filter(col("denies") =!= 0)
-      .select(
-        col(keyCol),
-        col("denies"),
-        col("session.start").as("session_start"),
-        col("session.end").as("session_end")
-      )
+    deniedCounts(events, timeCol, keyCol, lit(gap), denied, weight)
 
-  /** Dynamic-gap variant: the inactivity gap is a per-EVENT expression
+  /** The same count with the gap as a column, which may vary per event
     * (e.g. shorter sessions after error events) — Spark's dynamic
-    * `session_window(time, gapExpr)`. Merge semantics: an event extends
-    * its session to `ts + gap(event)`; sessions merge while the next
-    * event's time is ≤ the running max of those ends, so a later
-    * small-gap event never shrinks a window already extended. Same
-    * single-shuffle plan and per-session one-number state as the fixed
-    * form.
+    * `session_window(time, gap)`. Merge semantics: an event extends its
+    * session to `ts + gap(event)`; sessions merge while the next event's
+    * time is ≤ the running max of those ends, so a later small-gap event
+    * never shrinks a window already extended. A literal gap plans
+    * exactly as the String overload (which delegates here).
     */
-  def deniedCountsDynamic(
+  def deniedCounts(
       events: DataFrame,
       timeCol: String,
       keyCol: String,
-      gapExpr: Column,
+      gap: Column,
       denied: Column,
       weight: Column
   ): DataFrame =
     events
-      .groupBy(session_window(col(timeCol), gapExpr).as("session"), col(keyCol))
+      .groupBy(session_window(col(timeCol), gap).as("session"), col(keyCol))
       .agg(sum(when(denied, weight).otherwise(lit(0))).as("denies"))
       .filter(col("denies") =!= 0)
       .select(

@@ -129,9 +129,9 @@ object Vocab {
     * point — downstream consumers must not re-trigger the corpus word
     * count), and the CALLER owns the unpersist: materialize the
     * consuming result, then `dict.unpersist()` — the pattern the
-    * q_bpe_* gates and the ScaleProbe entries follow. Dropping the
-    * reference without unpersisting leaks one vocabulary-sized cached
-    * frame per call for the session's lifetime.
+    * q_bpe_* gates follow. Dropping the reference without unpersisting
+    * leaks one vocabulary-sized cached frame per call for the session's
+    * lifetime.
     */
   def mergedDict(docs: DataFrame, textCol: String, iters: Int): DataFrame = {
     var dict = symbols(docs, textCol)

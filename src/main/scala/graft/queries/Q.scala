@@ -72,16 +72,22 @@ object Q {
     * accumulate temp data. Unique per call: a shared path would race when
     * two processes (Bench + Verify) hit the same sf dir concurrently.
     * One static shutdown hook drains a shared queue — repeated calls in
-    * a long-lived session (MicroBench reps) don't grow the hook list.
+    * a long-lived session (`graft.tools.Probe` reps) don't grow the hook
+    * list.
     */
   private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
-  private lazy val scratchHook: Unit = Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    scratchDirs.forEach(rm(_))
-  }))
+  private lazy val scratchHook: Unit = Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    scratchDirs.forEach(deleteTree(_))))
+
+  /** Deletes `f` and everything under it. Symbolic links are removed,
+    * never followed: a scratch fixture links to the tables it does not
+    * rewrite, and those must survive.
+    */
+  private[graft] def deleteTree(f: java.io.File): Unit = {
+    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
+      Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete(): Unit
+  }
 
   def scratch(prefix: String): String = {
     scratchHook

@@ -48,11 +48,11 @@ object SessionQueries {
       "q_sessionize_dynamic",
       (spark, dir) =>
         Sessionize
-          .deniedCountsDynamic(
+          .deniedCounts(
             Q.t(spark, dir, "events"),
             timeCol = "ts",
             keyCol = "user_id",
-            gapExpr = when(col("event_type") === "error", "300 seconds")
+            gap = when(col("event_type") === "error", "300 seconds")
               .otherwise(s"$GapSeconds seconds"),
             denied = col("event_type") === "error",
             weight = col("value").cast(DecimalType(18, 4))

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Drives the driver-contract surfaces end-to-end: `SparkEntry.entry`
   * (smoke: rows > 0 at sf0.001) and each named query (non-empty plan +
   * execution). Usage: runMain graft.tools.Smoke [sfDir]
@@ -9,22 +7,15 @@ import org.apache.spark.sql.SparkSession
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Probe.withSession("WARN") { spark =>
+      val e = graft.SparkEntry.entry(spark)
+      println(s"ENTRY rows=${e.count()}")
+      e.show(5, false)
 
-    val e = graft.SparkEntry.entry(spark)
-    println(s"ENTRY rows=${e.count()}")
-    e.show(5, false)
-
-    graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val n = fn(spark, sfDir).count()
-      println(s"QUERY $name rows=$n")
+      graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+        val n = fn(spark, sfDir).count()
+        println(s"QUERY $name rows=$n")
+      }
     }
-    spark.stop()
   }
 }

@@ -115,9 +115,9 @@ class SessionizeSpec extends SparkSpec with TableDrivenPropertyChecks {
       ("u2", "error", ts("2022-09-26 10:00:00")),
       ("u2", "error", ts("2022-09-26 10:05:00"))
     ).toDF("user", "et", "t")
-    val out = Sessionize.deniedCountsDynamic(
+    val out = Sessionize.deniedCounts(
       events, "t", "user",
-      gapExpr = when(col("et") === "error", "60 seconds").otherwise("600 seconds"),
+      gap = when(col("et") === "error", "60 seconds").otherwise("600 seconds"),
       denied = col("et") === "error",
       weight = lit(1L)
     ).collect().map(r => (r.getString(0), r.getAs[Long]("denies"),

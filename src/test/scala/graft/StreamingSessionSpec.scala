@@ -62,9 +62,9 @@ class StreamingSessionSpec extends SparkSpec {
     val input = MemoryStream[(String, String, Timestamp)]
     val events = input.toDF().toDF("user", "et", "t")
       .withWatermark("t", "0 seconds")
-    val sessions = graft.operators.Sessionize.deniedCountsDynamic(
+    val sessions = graft.operators.Sessionize.deniedCounts(
       events, "t", "user",
-      gapExpr = when(col("et") === "error", "60 seconds").otherwise("600 seconds"),
+      gap = when(col("et") === "error", "60 seconds").otherwise("600 seconds"),
       denied = col("et") === "error",
       weight = lit(1L))
 
