@@ -311,39 +311,28 @@ object GraftMath {
     out
   }
 
-  /** Inflate a gzip member to UTF-8 text; null on any malformation
-    * (bad magic, truncated deflate stream, CRC mismatch — the
-    * GZIPInputStream verifies both CRC32 and ISIZE from the trailer).
-    * Bounded: refuses payloads that inflate past `MaxGunzipBytes`
-    * (decompression-bomb guard) by returning null rather than OOMing
-    * an executor.
+  /** Inflate gzip members to UTF-8 text; null on any malformation
+    * (bad magic, truncated deflate stream, CRC32 or ISIZE mismatch,
+    * bytes after the last member — [[graft.operators.CompressedMeta.gunzipAll]]'s
+    * all-or-null contract). Bounded: refuses payloads that inflate past
+    * `MaxGunzipBytes` (decompression-bomb guard) by returning null
+    * rather than OOMing an executor.
     */
   val MaxGunzipBytes: Int = 1 << 26 // 64 MiB of text per document
 
-  def gunzipUtf8(bytes: Array[Byte]): UTF8String =
+  def gunzipUtf8(bytes: Array[Byte]): UTF8String = {
+    val arr = graft.operators.CompressedMeta.gunzipAll(bytes, MaxGunzipBytes, MaxGunzipBytes.toLong)
+    if (arr == null) return null
+    // the degrade contract is "NULL on any malformation" — that
+    // includes members whose content is not valid UTF-8 (a gzipped
+    // binary payload inflates fine); REPORT-mode decode rejects it
+    // instead of letting mangled bytes flow into length/sha2/nfc
     try {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val out = new java.io.ByteArrayOutputStream(math.min(bytes.length * 4, 1 << 16))
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      var total = 0
-      while (n > 0) {
-        total += n
-        if (total > MaxGunzipBytes) return null
-        out.write(buf, 0, n)
-        n = in.read(buf)
-      }
-      in.close()
-      val arr = out.toByteArray
-      // the degrade contract is "NULL on any malformation" — that
-      // includes members whose content is not valid UTF-8 (a gzipped
-      // binary payload inflates fine); REPORT-mode decode rejects it
-      // instead of letting mangled bytes flow into length/sha2/nfc
       java.nio.charset.StandardCharsets.UTF_8.newDecoder()
         .decode(java.nio.ByteBuffer.wrap(arr)): Unit
       UTF8String.fromBytes(arr)
-    } catch { case _: Exception => null }
+    } catch { case _: java.nio.charset.CharacterCodingException => null }
+  }
 
   /** Unicode NFC normalization (UAX #15 via the JDK) — the canonical
     * text-canonicalization step before hashing/dedup: visually

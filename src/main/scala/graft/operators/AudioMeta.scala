@@ -53,10 +53,6 @@ object AudioMeta {
       (b(o + 2) & 0x7F) << 7 | (b(o + 3) & 0x7F)
   }
 
-  private def be32(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xFF) << 24 | (b(o + 1) & 0xFF) << 16 |
-      (b(o + 2) & 0xFF) << 8 | (b(o + 3) & 0xFF)
-
   /** Parse a leading ID3v2.3/v2.4 tag: (majorVersion, textFrames,
     * bytesConsumed). Frame sizes are plain big-endian in v2.3 and
     * syncsafe in v2.4 (the classic interop trap — both paths here).
@@ -86,7 +82,7 @@ object AudioMeta {
       if (i + 4 > end) return Some((ver, out.toSeq, end))
       val esz =
         if (ver == 4) syncsafe(bytes, i) // includes its own size field
-        else be32(bytes, i) + 4 // v2.3 size EXCLUDES the 4 size bytes
+        else Bytes.i32be(bytes, i) + 4 // v2.3 size EXCLUDES the 4 size bytes
       if (esz < 4 || i + esz.toLong > end) return Some((ver, out.toSeq, end))
       i += esz
     }
@@ -95,7 +91,7 @@ object AudioMeta {
       if (bytes(i) == 0) done = true // padding region
       else {
         val id = new String(bytes, i, 4, java.nio.charset.StandardCharsets.ISO_8859_1)
-        val fsz = if (ver == 4) syncsafe(bytes, i + 4) else be32(bytes, i + 4)
+        val fsz = if (ver == 4) syncsafe(bytes, i + 4) else Bytes.i32be(bytes, i + 4)
         if (fsz < 0 || i + 10 + fsz.toLong > end) done = true // torn frame: stop
         else {
           if (id.startsWith("T") && fsz >= 1) {
@@ -238,10 +234,7 @@ object AudioMeta {
     if (ver == 4) { // syncsafe
       out.write(sz >> 21 & 0x7F); out.write(sz >> 14 & 0x7F)
       out.write(sz >> 7 & 0x7F); out.write(sz & 0x7F)
-    } else {
-      out.write(sz >> 24); out.write(sz >> 16 & 0xFF)
-      out.write(sz >> 8 & 0xFF); out.write(sz & 0xFF)
-    }
+    } else out.write(Bytes.be(sz, 4))
     out.write(0); out.write(0) // frame flags
     out.write(payload, 0, payload.length)
     out.toByteArray

@@ -121,27 +121,6 @@ object Avro {
       }
     }
 
-  /** Raw-deflate inflate (the Avro `deflate` codec is zlib-header-less
-    * per spec), bomb-capped, all-or-null.
-    */
-  private def inflateRaw(data: Array[Byte], maxOut: Long): Array[Byte] = {
-    val inf = new java.util.zip.Inflater(true)
-    inf.setInput(data)
-    val out = new ByteArrayOutputStream()
-    val buf = new Array[Byte](64 << 10)
-    try {
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && !inf.finished()) return null
-        out.write(buf, 0, n)
-        if (out.size() > maxOut) return null
-      }
-      out.toByteArray
-    } catch {
-      case _: java.util.zip.DataFormatException => null
-    } finally inf.end()
-  }
-
   /** One container's read: `stage` is `ok` or the degrade
     * (`parse` | `schema` | `codec`), `fields` the schema's (name,
     * type) pairs, `records` the decoded rows as canonical strings —
@@ -205,7 +184,11 @@ object Avro {
             if (!java.util.Arrays.equals(syncGot, sync)) done = true // torn/corrupt: stop
             else {
               val payload =
-                if (codec == "deflate") inflateRaw(raw, maxBlockOut) else raw
+                if (codec != "deflate") raw
+                else { // raw deflate: the codec carries no zlib header
+                  val inf = Bytes.inflate(raw, 0, raw = true, maxBlockOut)
+                  if (inf == null) null else inf.bytes
+                }
               if (payload == null) done = true
               else {
                 val bc = new Cur(payload, 0)
@@ -319,13 +302,7 @@ object Avro {
       val data0 = payload.toByteArray
       val data =
         if (codec == "deflate") {
-          val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-          d.setInput(data0); d.finish()
-          val bo = new ByteArrayOutputStream()
-          val buf = new Array[Byte](8192)
-          while (!d.finished()) bo.write(buf, 0, d.deflate(buf))
-          d.end()
-          bo.toByteArray
+          Bytes.deflate(data0, raw = true)
         } else data0
       writeVarLong(out, block.length.toLong)
       writeVarLong(out, data.length.toLong)

@@ -36,12 +36,7 @@ object Cfb {
     bytes != null && bytes.length >= 8 &&
       (0 until 8).forall(i => (bytes(i) & 0xFF) == Magic(i))
 
-  private def u16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xFF) | ((b(off + 1) & 0xFF) << 8)
-
-  private def u32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xFFL) | ((b(off + 1) & 0xFFL) << 8) |
-      ((b(off + 2) & 0xFFL) << 16) | ((b(off + 3) & 0xFFL) << 24)
+  import Bytes.{u16le, u32le, u64le}
 
   /** One directory entry: name, object type (1 storage, 2 stream,
     * 5 root), starting sector, byte size.
@@ -61,16 +56,16 @@ object Cfb {
     */
   def parse(bytes: Array[Byte], maxBytes: Int = 64 << 20): Option[CfbDoc] = {
     if (!isCfb(bytes) || bytes.length < 512) return None
-    val shift = u16(bytes, 30)
+    val shift = u16le(bytes, 30)
     if (shift != 9 && shift != 12) return None
     val ss = 1 << shift
-    if (u16(bytes, 32) != 6) return None // mini sector shift is always 6
-    val numFat = u32(bytes, 44)
-    val dirStart = u32(bytes, 48)
-    val miniCutoff = u32(bytes, 56)
-    val miniFatStart = u32(bytes, 60)
-    val difatStart = u32(bytes, 68)
-    val numDifat = u32(bytes, 72)
+    if (u16le(bytes, 32) != 6) return None // mini sector shift is always 6
+    val numFat = u32le(bytes, 44)
+    val dirStart = u32le(bytes, 48)
+    val miniCutoff = u32le(bytes, 56)
+    val miniFatStart = u32le(bytes, 60)
+    val difatStart = u32le(bytes, 68)
+    val numDifat = u32le(bytes, 72)
     val nSectors = math.max(0L, (bytes.length.toLong - ss) / ss)
     if (numFat > nSectors + 1 || numDifat > nSectors) return None
 
@@ -82,7 +77,7 @@ object Cfb {
     val fatSectors = scala.collection.mutable.ArrayBuffer[Long]()
     var di = 0
     while (di < 109 && fatSectors.length < numFat) {
-      val s = u32(bytes, 76 + di * 4)
+      val s = u32le(bytes, 76 + di * 4)
       if (s != FreeSect) fatSectors += s
       di += 1
     }
@@ -93,11 +88,11 @@ object Cfb {
       val off = sectorOff(dsec)
       var j = 0
       while (j < ss / 4 - 1 && fatSectors.length < numFat) {
-        val s = u32(bytes, off + j * 4)
+        val s = u32le(bytes, off + j * 4)
         if (s != FreeSect) fatSectors += s
         j += 1
       }
-      dsec = u32(bytes, off + ss - 4)
+      dsec = u32le(bytes, off + ss - 4)
       dguard += 1
     }
     if (fatSectors.length < numFat) return None
@@ -108,7 +103,7 @@ object Cfb {
     fatSectors.zipWithIndex.foreach { case (s, k) =>
       val off = sectorOff(s)
       var j = 0
-      while (j < ss / 4) { fat(k * (ss / 4) + j) = u32(bytes, off + j * 4); j += 1 }
+      while (j < ss / 4) { fat(k * (ss / 4) + j) = u32le(bytes, off + j * 4); j += 1 }
     }
 
     def chain(start: Long): Option[Seq[Long]] = {
@@ -160,17 +155,17 @@ object Cfb {
     val nSlots = dirBytes.length / 128
     val raw: IndexedSeq[Option[RawEntry]] = (0 until nSlots).map { k =>
       val off = k * 128
-      val nameLen = u16(dirBytes, off + 64)
+      val nameLen = u16le(dirBytes, off + 64)
       val typ = dirBytes(off + 66) & 0xFF
       if (typ == 0 || nameLen < 2 || nameLen > 64) None
       else {
         val name = new String(dirBytes, off, nameLen - 2, UTF_16LE)
-        val start = u32(dirBytes, off + 116)
+        val start = u32le(dirBytes, off + 116)
         val size =
-          if (shift == 9) u32(dirBytes, off + 120) // v3: low 32 bits only
-          else u32(dirBytes, off + 120) | (u32(dirBytes, off + 124) << 32)
+          if (shift == 9) u32le(dirBytes, off + 120) // v3: low 32 bits only
+          else u64le(dirBytes, off + 120)
         Some(RawEntry(name, typ, start, size,
-          u32(dirBytes, off + 68), u32(dirBytes, off + 72), u32(dirBytes, off + 76)))
+          u32le(dirBytes, off + 68), u32le(dirBytes, off + 72), u32le(dirBytes, off + 76)))
       }
     }
     val rootIdx = raw.indexWhere(_.exists(_.typ == 5))
@@ -237,7 +232,7 @@ object Cfb {
             val off = sectorOff(s)
             if (off + ss > bytes.length) return None
             var j = 0
-            while (j < ss / 4) { m(k * (ss / 4) + j) = u32(bytes, off + j * 4); j += 1 }
+            while (j < ss / 4) { m(k * (ss / 4) + j) = u32le(bytes, off + j * 4); j += 1 }
           }
           Some(m)
         }
@@ -396,11 +391,8 @@ object Cfb {
     // directory entries
     val dir = new Array[Byte](dirSectors * ss)
     java.util.Arrays.fill(dir, 0.toByte)
-    def w16(b: Array[Byte], off: Int, v: Int): Unit = {
-      b(off) = (v & 0xFF).toByte; b(off + 1) = ((v >> 8) & 0xFF).toByte
-    }
-    def w32(b: Array[Byte], off: Int, v: Long): Unit =
-      (0 until 4).foreach(i => b(off + i) = ((v >> (8 * i)) & 0xFF).toByte)
+    def w16(b: Array[Byte], off: Int, v: Int): Unit = System.arraycopy(Bytes.le(v, 2), 0, b, off, 2)
+    def w32(b: Array[Byte], off: Int, v: Long): Unit = System.arraycopy(Bytes.le(v, 4), 0, b, off, 4)
     def entry(idx: Int, name: String, typ: Int, start: Long, size: Long,
         child: Long, right: Long): Unit = {
       val off = idx * 128

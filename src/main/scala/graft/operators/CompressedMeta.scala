@@ -22,15 +22,7 @@ import org.apache.spark.sql.functions._
   */
 object CompressedMeta {
 
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xFF) | (b(o + 1) & 0xFF) << 8
-  private def le24(b: Array[Byte], o: Int): Int =
-    le16(b, o) | (b(o + 2) & 0xFF) << 16
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xFFL) | (b(o + 1) & 0xFFL) << 8 |
-      (b(o + 2) & 0xFFL) << 16 | (b(o + 3) & 0xFFL) << 24
-  private def le64(b: Array[Byte], o: Int): Long =
-    le32(b, o) | le32(b, o + 4) << 32
+  import Bytes.{u16le, u24le, u32le, u64le}
 
   /** One gzip member's inventory (RFC 1952). `isize` is the trailer's
     * decompressed-size-mod-2^32 under the SINGLE-member contract (the
@@ -68,7 +60,7 @@ object CompressedMeta {
     var fname: String = null
     if ((flg & 4) != 0) { // FEXTRA
       if (p + 2 > bytes.length) return (null, 0)
-      val xlen = le16(bytes, p); p += 2 + xlen
+      val xlen = u16le(bytes, p); p += 2 + xlen
     }
     if ((flg & 8) != 0) { // FNAME: zero-terminated latin-1
       val s = p
@@ -90,12 +82,12 @@ object CompressedMeta {
       (bytes(0) & 0xFF) != 0x1F || (bytes(1) & 0xFF) != 0x8B)
       return GzipInventory(id, false, 0, 0L, 0, null, 0, 0L)
     val method = bytes(2) & 0xFF
-    val mtime = le32(bytes, 4)
+    val mtime = u32le(bytes, 4)
     val os = bytes(9) & 0xFF
     val (fname, headerLen) = gzipHeaderAt(bytes, 0)
     // trailer: CRC32 + ISIZE — only readable when the member is whole
     val isize =
-      if (headerLen > 0 && bytes.length >= headerLen + 8) le32(bytes, bytes.length - 4)
+      if (headerLen > 0 && bytes.length >= headerLen + 8) u32le(bytes, bytes.length - 4)
       else 0L
     GzipInventory(id, true, method, mtime, os,
       if (headerLen == 0) null else fname, headerLen, isize)
@@ -127,7 +119,7 @@ object CompressedMeta {
     var i = 0
     var stop = bytes == null
     while (!stop && i + 4 <= bytes.length) {
-      val magic = le32(bytes, i)
+      val magic = u32le(bytes, i)
       if (magic == 0xFD2FB528L) {
         var p = i + 4
         var torn = false
@@ -153,17 +145,17 @@ object CompressedMeta {
           if (dictLen > 0 && need(dictLen)) {
             fDict = dictLen match {
               case 1 => (bytes(p) & 0xFFL)
-              case 2 => le16(bytes, p).toLong
-              case _ => le32(bytes, p)
+              case 2 => u16le(bytes, p).toLong
+              case _ => u32le(bytes, p)
             }
             p += dictLen
           }
           if (fcsLen > 0 && need(fcsLen)) {
             fcs = fcsLen match {
               case 1 => bytes(p) & 0xFFL
-              case 2 => le16(bytes, p) + 256L // the 2-byte field stores FCS − 256
-              case 4 => le32(bytes, p)
-              case _ => le64(bytes, p)
+              case 2 => u16le(bytes, p) + 256L // the 2-byte field stores FCS − 256
+              case 4 => u32le(bytes, p)
+              case _ => u64le(bytes, p)
             }
             p += fcsLen
           }
@@ -173,7 +165,7 @@ object CompressedMeta {
           var last = false
           while (!torn && !last) {
             if (need(3)) {
-              val hdr = le24(bytes, p); p += 3
+              val hdr = u24le(bytes, p); p += 3
               last = (hdr & 1) == 1
               val btype = (hdr >>> 1) & 3
               val bsize = hdr >>> 3
@@ -197,7 +189,7 @@ object CompressedMeta {
       } else if ((magic & 0xFFFFFFF0L) == 0x184D2A50L) {
         if (i + 8 > bytes.length) stop = true
         else {
-          val sz = le32(bytes, i + 4)
+          val sz = u32le(bytes, i + 4)
           if (i + 8 + sz > bytes.length) stop = true
           else { skippable += 1; i += 8 + sz.toInt }
         }
@@ -211,9 +203,9 @@ object CompressedMeta {
   /** Split a CONCATENATED-members gzip payload into its per-member
     * decompressed outputs — the `.warc.gz` reading path: Common Crawl
     * gzips ONE member PER RECORD so readers can seek, and a whole-file
-    * gunzip (GZIPInputStream transparently concatenates) loses exactly
+    * gunzip (which transparently concatenates members) loses exactly
     * those boundaries. Each member: header walk ([[gzipInventory]]'s
-    * arithmetic) → raw-Inflater inflate (the member's compressed
+    * arithmetic) → bounded raw inflate (the member's compressed
     * extent is only knowable BY inflating — RFC 1952 has no length
     * field) → CRC32 + ISIZE trailer VERIFIED (a corrupt member and
     * everything after it drops — the completed-prefix contract).
@@ -280,43 +272,24 @@ object CompressedMeta {
     var total = 0L
     var stop = false
     while (!stop && i + 10 <= bytes.length) {
-      val isGz = (bytes(i) & 0xFF) == 0x1F && (bytes(i + 1) & 0xFF) == 0x8B
+      // CM 8 (deflate) is the only method RFC 1952 defines
+      val isGz = (bytes(i) & 0xFF) == 0x1F && (bytes(i + 1) & 0xFF) == 0x8B && bytes(i + 2) == 8
       val headerLen = if (isGz) gzipHeaderAt(bytes, i)._2 else 0
-      if (!isGz || headerLen == 0) stop = true
+      val inf = if (headerLen == 0) null else Bytes.inflate(bytes, i + headerLen, raw = true,
+        math.min(maxOutPerMember, maxOutTotal - total))
+      val trailerAt = if (inf == null) bytes.length else i + headerLen + inf.consumed
+      if (trailerAt + 8 > bytes.length) stop = true // not gzip, torn, corrupt or past a cap
       else {
-        val dataStart = i + headerLen
-        val inf = new java.util.zip.Inflater(true)
-        inf.setInput(bytes, dataStart, bytes.length - dataStart)
-        val member = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        try {
-          while (!inf.finished() && !stop) {
-            val n = inf.inflate(buf)
-            if (n == 0 && !inf.finished()) stop = true // truncated stream
-            else {
-              member.write(buf, 0, n)
-              if (member.size() > maxOutPerMember) stop = true // bomb cap
-            }
-          }
-          if (!stop) {
-            val trailerAt = dataStart + inf.getBytesRead.toInt
-            if (trailerAt + 8 > bytes.length) stop = true
-            else {
-              val data = member.toByteArray
-              val crc = new java.util.zip.CRC32()
-              crc.update(data)
-              val okCrc = le32(bytes, trailerAt) == crc.getValue
-              val okSize = le32(bytes, trailerAt + 4) == (data.length.toLong & 0xFFFFFFFFL)
-              if (okCrc && okSize) {
-                total += data.length
-                if (total > maxOutTotal) stop = true // aggregate bomb cap
-                else { out += data; i = trailerAt + 8 }
-              } else stop = true // corrupt member: drop it and the rest
-            }
-          }
-        } catch {
-          case _: java.util.zip.DataFormatException => stop = true
-        } finally inf.end()
+        val data = inf.bytes
+        val crc = new java.util.zip.CRC32()
+        crc.update(data)
+        val okCrc = u32le(bytes, trailerAt) == crc.getValue
+        val okSize = u32le(bytes, trailerAt + 4) == (data.length.toLong & 0xFFFFFFFFL)
+        if (okCrc && okSize) {
+          total += data.length
+          out += data
+          i = trailerAt + 8
+        } else stop = true // corrupt member: drop it and the rest
       }
     }
     (out.toSeq, i, !stop)
@@ -341,9 +314,6 @@ object CompressedMeta {
 
   // --- synthetic fixtures --------------------------------------------------
 
-  private def leBytes(v: Long, n: Int): Array[Byte] =
-    (0 until n).map(k => ((v >>> (8 * k)) & 0xFF).toByte).toArray
-
   /** Wrap raw bytes as one minimal gzip member (header flags 0, raw
     * deflate, CRC32 + ISIZE trailer) — the `.warc.gz` fixtures'
     * per-record builder.
@@ -351,22 +321,13 @@ object CompressedMeta {
   def gzipMember(data: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
     out.write(0x1F); out.write(0x8B); out.write(8); out.write(0)
-    out.write(leBytes(0L, 4), 0, 4)
+    out.write(Bytes.le(0L, 4))
     out.write(0); out.write(3)
-    val defl = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-    defl.setInput(data); defl.finish()
-    val buf = new Array[Byte](data.length + 64)
-    var done = false
-    while (!done) {
-      val n = defl.deflate(buf)
-      if (n > 0) out.write(buf, 0, n)
-      done = defl.finished()
-    }
-    defl.end()
+    out.write(Bytes.deflate(data, raw = true))
     val crc = new java.util.zip.CRC32()
     crc.update(data)
-    out.write(leBytes(crc.getValue, 4), 0, 4)
-    out.write(leBytes(data.length.toLong, 4), 0, 4)
+    out.write(Bytes.le(crc.getValue, 4))
+    out.write(Bytes.le(data.length.toLong, 4))
     out.toByteArray
   }
 
@@ -383,27 +344,22 @@ object CompressedMeta {
     def member(flg: Int, mtime: Long, name: String, textLen: Int): Array[Byte] = {
       val out = new java.io.ByteArrayOutputStream()
       out.write(0x1F); out.write(0x8B); out.write(8); out.write(flg)
-      out.write(leBytes(mtime, 4), 0, 4)
+      out.write(Bytes.le(mtime, 4))
       out.write(0); out.write(3) // XFL, OS=unix
-      if ((flg & 4) != 0) { out.write(leBytes(4L, 2), 0, 2); out.write(new Array[Byte](4), 0, 4) }
+      if ((flg & 4) != 0) { out.write(Bytes.le(4L, 2)); out.write(new Array[Byte](4), 0, 4) }
       if ((flg & 8) != 0) {
         out.write(name.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1),
           0, name.length)
         out.write(0)
       }
-      if ((flg & 2) != 0) out.write(leBytes(0x1234L, 2), 0, 2)
+      if ((flg & 2) != 0) out.write(Bytes.le(0x1234L, 2))
       val text = (0 until textLen).map(k => ('a' + (seed + k) % 26).toChar)
         .mkString.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-      val defl = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
-      defl.setInput(text); defl.finish()
-      val buf = new Array[Byte](textLen + 64)
-      val n = defl.deflate(buf)
-      defl.end()
-      out.write(buf, 0, n)
+      out.write(Bytes.deflate(text, raw = true))
       val crc = new java.util.zip.CRC32()
       crc.update(text)
-      out.write(leBytes(crc.getValue, 4), 0, 4)
-      out.write(leBytes(text.length.toLong, 4), 0, 4)
+      out.write(Bytes.le(crc.getValue, 4))
+      out.write(Bytes.le(text.length.toLong, 4))
       out.toByteArray
     }
     (seed % 4).toInt match {
@@ -428,14 +384,14 @@ object CompressedMeta {
     */
   def syntheticZstd(seed: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def magic(): Unit = out.write(leBytes(0xFD2FB528L, 4), 0, 4)
+    def magic(): Unit = out.write(Bytes.le(0xFD2FB528L, 4))
     def rawFrame(content: Int, checksum: Boolean): Unit = {
       magic()
       out.write(0x20 | (if (checksum) 0x04 else 0)) // single-segment, FCS flag 0 → 1 byte
       out.write(content & 0xFF)
-      out.write(leBytes(((content.toLong << 3) | 1L), 3), 0, 3) // last, raw, size
+      out.write(Bytes.le(((content.toLong << 3) | 1L), 3)) // last, raw, size
       for (k <- 0 until content) out.write(((seed + k) % 251).toInt)
-      if (checksum) out.write(leBytes(0xCAFEBABEL, 4), 0, 4) // not verified by the walk
+      if (checksum) out.write(Bytes.le(0xCAFEBABEL, 4)) // not verified by the walk
     }
     (seed % 4).toInt match {
       case 0 =>
@@ -445,13 +401,13 @@ object CompressedMeta {
         out.write((2 << 6) | 1) // 4-byte FCS, windowed, 1-byte dict id
         out.write(0x08) // exponent 1 → 2048, mantissa 0
         out.write((7 + seed % 5).toInt)
-        out.write(leBytes(1000L + seed, 4), 0, 4)
+        out.write(Bytes.le(1000L + seed, 4))
         val rleSize = 1000L + seed
-        out.write(leBytes((rleSize << 3) | (1L << 1) | 1L, 3), 0, 3) // last, RLE
+        out.write(Bytes.le((rleSize << 3) | (1L << 1) | 1L, 3)) // last, RLE
         out.write(0x42) // the one regenerated byte
         // skippable frame
-        out.write(leBytes(0x184D2A53L, 4), 0, 4)
-        out.write(leBytes(8L, 4), 0, 4)
+        out.write(Bytes.le(0x184D2A53L, 4))
+        out.write(Bytes.le(8L, 4))
         out.write(new Array[Byte](8), 0, 8)
         rawFrame(40 + (seed % 10).toInt, checksum = false)
       case 2 =>

@@ -22,6 +22,8 @@ import org.apache.spark.sql.functions._
   */
 object ContainerMeta {
 
+  import Bytes.{i32be, u16le, u32be, u32le, u64be, u64le}
+
   /** One MP4 blob's inventory: major brand from `ftyp`, movie
     * timescale/duration from `mvhd` (both version 0 and 1 layouts),
     * track count and handler kinds from `trak`/`hdlr`, presentation
@@ -40,12 +42,6 @@ object ContainerMeta {
       width: Int,
       height: Int)
 
-  private def be32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xFFL) << 24 | (b(o + 1) & 0xFFL) << 16 |
-      (b(o + 2) & 0xFFL) << 8 | (b(o + 3) & 0xFFL)
-  private def be64(b: Array[Byte], o: Int): Long =
-    be32(b, o) << 32 | be32(b, o + 4)
-
   /** ISO-BMFF containers whose children are themselves boxes — the
     * walk recurses into exactly these; everything else is a leaf.
     */
@@ -63,15 +59,18 @@ object ContainerMeta {
     var nTracks = 0; var hasV = false; var hasA = false
     var w = 0; var h = 0
     var trakW = 0; var trakH = 0
-    def walk(start: Long, end: Long): Unit = {
+    def walk(start: Long, end: Long, depth: Int): Unit = {
+      // real files nest about six deep; a crafted chain of 8-byte
+      // container headers must degrade, not overflow the stack
+      if (depth > 64) return
       var i = start
       while (i + 8 <= end) {
-        val sz32 = be32(bytes, i.toInt)
+        val sz32 = u32be(bytes, i.toInt)
         val typ = new String(bytes, i.toInt + 4, 4,
           java.nio.charset.StandardCharsets.ISO_8859_1)
         var body = i + 8
         val boxEnd =
-          if (sz32 == 1L && i + 16 <= end) { body = i + 16; i + be64(bytes, i.toInt + 8) }
+          if (sz32 == 1L && i + 16 <= end) { body = i + 16; i + u64be(bytes, i.toInt + 8) }
           else if (sz32 == 0L) end
           else i + sz32
         if (boxEnd < body || boxEnd > end) return // malformed: stop this level
@@ -82,21 +81,21 @@ object ContainerMeta {
           case "mvhd" if boxEnd - body >= 4 =>
             val v = bytes(body.toInt) & 0xFF
             if (v == 1 && boxEnd - body >= 28) {
-              timescale = be32(bytes, body.toInt + 20)
-              duration = be64(bytes, body.toInt + 24)
+              timescale = u32be(bytes, body.toInt + 20)
+              duration = u64be(bytes, body.toInt + 24)
             } else if (v == 0 && boxEnd - body >= 20) {
-              timescale = be32(bytes, body.toInt + 12)
-              duration = be32(bytes, body.toInt + 16)
+              timescale = u32be(bytes, body.toInt + 12)
+              duration = u32be(bytes, body.toInt + 16)
             }
           case "trak" =>
             nTracks += 1; trakW = 0; trakH = 0
-            walk(body, boxEnd)
+            walk(body, boxEnd, depth + 1)
           case "tkhd" if boxEnd - body >= 1 =>
             val v = bytes(body.toInt) & 0xFF
             // width/height are the LAST 8 bytes of the box (16.16)
             if (boxEnd - body >= (if (v == 1) 92 else 80)) {
-              trakW = (be32(bytes, boxEnd.toInt - 8) >> 16).toInt
-              trakH = (be32(bytes, boxEnd.toInt - 4) >> 16).toInt
+              trakW = (u32be(bytes, boxEnd.toInt - 8) >> 16).toInt
+              trakH = (u32be(bytes, boxEnd.toInt - 4) >> 16).toInt
             }
           case "hdlr" if boxEnd - body >= 12 =>
             val kind = new String(bytes, body.toInt + 8, 4,
@@ -104,7 +103,7 @@ object ContainerMeta {
             if (kind == "vide") { hasV = true; w = trakW; h = trakH }
             if (kind == "soun") hasA = true
           case t if Mp4Containers.contains(t) =>
-            walk(body, boxEnd)
+            walk(body, boxEnd, depth + 1)
           case _ => ()
         }
         i = boxEnd
@@ -114,7 +113,7 @@ object ContainerMeta {
     // without a leading ftyp are out); everything else degrades
     if (bytes.length >= 8 &&
         new String(bytes, 4, 4, java.nio.charset.StandardCharsets.ISO_8859_1) == "ftyp")
-      walk(0L, bytes.length.toLong)
+      walk(0L, bytes.length.toLong, 0)
     val durMs = if (timescale > 0) duration * 1000L / timescale else 0L
     Mp4Inventory(id, brand, timescale, duration, durMs, nTracks, hasV, hasA, w, h)
   } catch {
@@ -138,14 +137,6 @@ object ContainerMeta {
       granule: Long,
       dur_ms: Long)
 
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xFF) | (b(o + 1) & 0xFF) << 8
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xFFL) | (b(o + 1) & 0xFFL) << 8 |
-      (b(o + 2) & 0xFFL) << 16 | (b(o + 3) & 0xFFL) << 24
-  private def le64(b: Array[Byte], o: Int): Long =
-    le32(b, o) | le32(b, o + 4) << 32
-
   /** Inventory one Ogg payload: page walk (magic, version 0, lacing
     * table → payload size), id-header sniff on the first page.
     */
@@ -159,7 +150,7 @@ object ContainerMeta {
       if (bytes(i) != 'O' || bytes(i + 1) != 'g' || bytes(i + 2) != 'g' ||
           bytes(i + 3) != 'S' || bytes(i + 4) != 0) done = true
       else {
-        val g = le64(bytes, i + 6)
+        val g = u64le(bytes, i + 6)
         val nsegs = bytes(i + 26) & 0xFF
         if (i + 27 + nsegs > bytes.length) done = true
         else {
@@ -175,14 +166,14 @@ object ContainerMeta {
                   bytes(bodyOff + 4) == 'H' && payload >= 19) {
                 codec = "opus"
                 channels = bytes(bodyOff + 9) & 0xFF
-                preskip = le16(bytes, bodyOff + 10)
+                preskip = u16le(bytes, bodyOff + 10)
                 rate = 48000 // opus granules always tick at 48 kHz
               } else if (bytes(bodyOff) == 1 && bytes(bodyOff + 1) == 'v' &&
                   bytes(bodyOff + 2) == 'o' && bytes(bodyOff + 3) == 'r' &&
                   bytes(bodyOff + 4) == 'b' && payload >= 30) {
                 codec = "vorbis"
                 channels = bytes(bodyOff + 11) & 0xFF
-                rate = le32(bytes, bodyOff + 12).toInt
+                rate = u32le(bytes, bodyOff + 12).toInt
               }
             }
             // granule -1 marks a no-packet-ends-here page: keep the max
@@ -271,8 +262,8 @@ object ContainerMeta {
   }
 
   private def ebmlFloat(b: Array[Byte], o: Int, end: Int): Double =
-    if (end - o == 4) java.lang.Float.intBitsToFloat(be32(b, o).toInt).toDouble
-    else if (end - o == 8) java.lang.Double.longBitsToDouble(be64(b, o))
+    if (end - o == 4) java.lang.Float.intBitsToFloat(i32be(b, o)).toDouble
+    else if (end - o == 8) java.lang.Double.longBitsToDouble(u64be(b, o))
     else 0.0
 
   private def ebmlStr(b: Array[Byte], o: Int, end: Int): String =
@@ -345,7 +336,7 @@ object ContainerMeta {
       }
     }
     // only an EBML-led payload is in contract; everything else degrades
-    if (bytes.length >= 4 && (be32(bytes, 0) & 0xFFFFFFFFL) == 0x1A45DFA3L)
+    if (bytes.length >= 4 && u32be(bytes, 0) == 0x1A45DFA3L)
       walk(0L, bytes.length.toLong, "top")
     // doc type is the contract anchor: without it the payload is a
     // torn/adversarial header, and timescale/duration must degrade
@@ -391,34 +382,26 @@ object ContainerMeta {
 
   private def box(typ: String, body: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    val sz = body.length + 8
-    out.write((sz >> 24) & 0xFF); out.write((sz >> 16) & 0xFF)
-    out.write((sz >> 8) & 0xFF); out.write(sz & 0xFF)
+    out.write(Bytes.be(body.length + 8L, 4))
     out.write(typ.getBytes("ISO-8859-1"), 0, 4)
     out.write(body, 0, body.length)
     out.toByteArray
   }
 
-  private def beBytes32(v: Long): Array[Byte] =
-    Array(((v >> 24) & 0xFF).toByte, ((v >> 16) & 0xFF).toByte,
-      ((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-  private def beBytes64(v: Long): Array[Byte] =
-    beBytes32(v >> 32) ++ beBytes32(v & 0xFFFFFFFFL)
-
   private def mvhdBox(version: Int, timescale: Long, duration: Long): Array[Byte] = {
     val body =
       if (version == 1)
-        Array[Byte](1, 0, 0, 0) ++ beBytes64(0) ++ beBytes64(0) ++
-          beBytes32(timescale) ++ beBytes64(duration) ++ new Array[Byte](80)
+        Array[Byte](1, 0, 0, 0) ++ Bytes.be(0, 8) ++ Bytes.be(0, 8) ++
+          Bytes.be(timescale, 4) ++ Bytes.be(duration, 8) ++ new Array[Byte](80)
       else
-        Array[Byte](0, 0, 0, 0) ++ beBytes32(0) ++ beBytes32(0) ++
-          beBytes32(timescale) ++ beBytes32(duration) ++ new Array[Byte](80)
+        Array[Byte](0, 0, 0, 0) ++ Bytes.be(0, 4) ++ Bytes.be(0, 4) ++
+          Bytes.be(timescale, 4) ++ Bytes.be(duration, 4) ++ new Array[Byte](80)
     box("mvhd", body)
   }
 
   private def trakBox(kind: String, w: Int, h: Int): Array[Byte] = {
     val tkhdBody = Array[Byte](0, 0, 0, 0) ++ new Array[Byte](72) ++
-      beBytes32(w.toLong << 16) ++ beBytes32(h.toLong << 16) // 80-byte v0 body
+      Bytes.be(w.toLong << 16, 4) ++ Bytes.be(h.toLong << 16, 4) // 80-byte v0 body
     val hdlrBody = new Array[Byte](8) ++ kind.getBytes("ISO-8859-1") ++
       new Array[Byte](12)
     box("trak", box("tkhd", tkhdBody) ++
@@ -434,12 +417,12 @@ object ContainerMeta {
     */
   def syntheticMp4(seed: Long): Array[Byte] = (seed % 3).toInt match {
     case 0 =>
-      box("ftyp", "isom".getBytes ++ beBytes32(0) ++ "isomiso2".getBytes) ++
+      box("ftyp", "isom".getBytes ++ Bytes.be(0, 4) ++ "isomiso2".getBytes) ++
         box("moov", mvhdBox(0, 1000L, 90000L + seed) ++
           trakBox("vide", 640 + (seed % 5).toInt, 360) ++
           trakBox("soun", 0, 0))
     case 1 =>
-      box("ftyp", "mp42".getBytes ++ beBytes32(1) ++ "mp42".getBytes) ++
+      box("ftyp", "mp42".getBytes ++ Bytes.be(1, 4) ++ "mp42".getBytes) ++
         box("moov", mvhdBox(1, 600L, 1234567890L + seed) ++
           trakBox("soun", 0, 0))
     case _ =>
@@ -450,9 +433,9 @@ object ContainerMeta {
     val out = new java.io.ByteArrayOutputStream()
     out.write("OggS".getBytes, 0, 4); out.write(0)
     out.write(if (seq == 0) 2 else 0) // BOS flag on the first page
-    for (k <- 0 until 8) out.write(((granule >> (8 * k)) & 0xFF).toInt)
-    for (k <- 0 until 4) out.write((0x42 >> (8 * k) & 0xFF)) // serial
-    for (k <- 0 until 4) out.write(((seq >> (8 * k)) & 0xFF))
+    out.write(Bytes.le(granule, 8))
+    out.write(Bytes.le(0x42, 4)) // serial
+    out.write(Bytes.le(seq, 4))
     for (_ <- 0 until 4) out.write(0) // CRC (not verified by the walk)
     // lacing: 255-byte segments + the final short one
     val full = payload.length / 255; val rest = payload.length % 255
@@ -471,7 +454,7 @@ object ContainerMeta {
   def syntheticOgg(seed: Long): Array[Byte] = (seed % 3).toInt match {
     case 0 =>
       val head = "OpusHead".getBytes ++ Array[Byte](1, 2) ++
-        Array[Byte]((312 & 0xFF).toByte, (312 >> 8).toByte) ++
+        Bytes.le(312, 2) ++
         new Array[Byte](7)
       oggPage(0L, 0, head) ++
         oggPage(48000L + seed, 1, (0 until 40).map(i => ((seed + i) & 0x7D).toByte).toArray)
@@ -480,9 +463,8 @@ object ContainerMeta {
       // 30-byte id header: type+\"vorbis\"+version+ch+rate+3 bitrates+
       // blocksizes+framing
       val head = Array[Byte](1) ++ "vorbis".getBytes ++
-        beBytes32(0) ++ Array[Byte](ch) ++
-        Array[Byte]((44100 & 0xFF).toByte, ((44100 >> 8) & 0xFF).toByte,
-          ((44100 >> 16) & 0xFF).toByte, 0) ++ new Array[Byte](12) ++
+        Bytes.be(0, 4) ++ Array[Byte](ch) ++
+        Bytes.le(44100, 4) ++ new Array[Byte](12) ++
         Array[Byte](0x58, 1)
       oggPage(0L, 0, head) ++
         oggPage(22050L + seed, 1, (0 until 40).map(i => ((seed + i) & 0x7D).toByte).toArray)
@@ -503,13 +485,10 @@ object ContainerMeta {
   private def eEl(idBytes: Array[Byte], body: Array[Byte]): Array[Byte] =
     idBytes ++ eSize(body.length.toLong) ++ body
 
-  private def eUint(v: Long, len: Int): Array[Byte] =
-    (0 until len).map(k => ((v >> (8 * (len - 1 - k))) & 0xFF).toByte).toArray
-
   private def eF64(v: Double): Array[Byte] =
-    eUint(java.lang.Double.doubleToLongBits(v), 8)
+    Bytes.be(java.lang.Double.doubleToLongBits(v), 8)
   private def eF32(v: Float): Array[Byte] =
-    eUint(java.lang.Float.floatToIntBits(v).toLong & 0xFFFFFFFFL, 4)
+    Bytes.be(java.lang.Float.floatToIntBits(v), 4)
 
   private val IdEbml = Array(0x1A, 0x45, 0xDF, 0xA3).map(_.toByte)
   private val IdSegment = Array(0x18, 0x53, 0x80, 0x67).map(_.toByte)
@@ -518,7 +497,7 @@ object ContainerMeta {
 
   private def mkvTrack(tType: Int, codec: String, extra: Array[Byte]): Array[Byte] =
     eEl(Array(0xAE.toByte),
-      eEl(Array(0x83.toByte), eUint(tType.toLong, 1)) ++
+      eEl(Array(0x83.toByte), Bytes.be(tType.toLong, 1)) ++
         eEl(Array(0x86.toByte), codec.getBytes("UTF-8")) ++ extra)
 
   /** Four-arm Matroska/WebM fixture keyed on `seed % 4`:
@@ -537,17 +516,17 @@ object ContainerMeta {
       val header = eEl(IdEbml,
         eEl(Array(0x42.toByte, 0x82.toByte), "webm".getBytes("UTF-8")))
       val info = eEl(IdInfo,
-        eEl(Array(0x2A.toByte, 0xD7.toByte, 0xB1.toByte), eUint(1000000L, 4)) ++
+        eEl(Array(0x2A.toByte, 0xD7.toByte, 0xB1.toByte), Bytes.be(1000000L, 4)) ++
           eEl(Array(0x44.toByte, 0x89.toByte), eF64((90000L + seed).toDouble)))
       val tracks = eEl(IdTracks,
         mkvTrack(1, "V_VP9",
           eEl(Array(0xE0.toByte),
-            eEl(Array(0xB0.toByte), eUint(1280L + seed % 7, 2)) ++
-              eEl(Array(0xBA.toByte), eUint(720L, 2)))) ++
+            eEl(Array(0xB0.toByte), Bytes.be(1280L + seed % 7, 2)) ++
+              eEl(Array(0xBA.toByte), Bytes.be(720L, 2)))) ++
           mkvTrack(2, "A_OPUS",
             eEl(Array(0xE1.toByte),
               eEl(Array(0xB5.toByte), eF64(48000.0)) ++
-                eEl(Array(0x9F.toByte), eUint(2L, 1)))))
+                eEl(Array(0x9F.toByte), Bytes.be(2L, 1)))))
       val full = header ++ IdSegment ++ eSize(-1L) ++ info ++ tracks
       if (seed % 4 == 0) full
       else java.util.Arrays.copyOf(full, header.length + IdSegment.length + 1 +
@@ -556,14 +535,14 @@ object ContainerMeta {
       val header = eEl(IdEbml,
         eEl(Array(0x42.toByte, 0x82.toByte), "matroska".getBytes("UTF-8")))
       val info = eEl(IdInfo,
-        eEl(Array(0x2A.toByte, 0xD7.toByte, 0xB1.toByte), eUint(2000000L, 4)) ++
+        eEl(Array(0x2A.toByte, 0xD7.toByte, 0xB1.toByte), Bytes.be(2000000L, 4)) ++
           eEl(Array(0x44.toByte, 0x89.toByte),
             eF32((30000L + seed % 1000).toFloat)))
       val tracks = eEl(IdTracks,
         mkvTrack(2, "A_VORBIS",
           eEl(Array(0xE1.toByte),
             eEl(Array(0xB5.toByte), eF64(44100.0)) ++
-              eEl(Array(0x9F.toByte), eUint(1L + seed % 2, 1)))))
+              eEl(Array(0x9F.toByte), Bytes.be(1L + seed % 2, 1)))))
       header ++ IdSegment ++ eSize((info.length + tracks.length).toLong) ++
         info ++ tracks
     case _ =>

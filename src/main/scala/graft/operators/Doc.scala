@@ -39,12 +39,7 @@ object Doc {
 
   final case class DocText(stage: String, paragraphs: Seq[String])
 
-  private def u16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xFF) | ((b(off + 1) & 0xFF) << 8)
-
-  private def u32(b: Array[Byte], off: Int): Long =
-    (b(off) & 0xFFL) | ((b(off + 1) & 0xFFL) << 8) |
-      ((b(off + 2) & 0xFFL) << 16) | ((b(off + 3) & 0xFFL) << 24)
+  import Bytes.{u16le, u32le}
 
   /** FIB flag bits at offset 0x0A. */
   private val FEncrypted = 0x0100
@@ -55,7 +50,7 @@ object Doc {
     * `encrypted` (not `doc`) without running the piece table.
     */
   private[operators] def fibEncrypted(wd: Array[Byte]): Boolean =
-    wd.length >= 12 && u16(wd, 0) == 0xA5EC && (u16(wd, 0x0A) & FEncrypted) != 0
+    wd.length >= 12 && u16le(wd, 0) == 0xA5EC && (u16le(wd, 0x0A) & FEncrypted) != 0
 
   /** Extract from an already-parsed container (the one-walk triage
     * path — [[read]] wraps it for standalone use).
@@ -63,12 +58,12 @@ object Doc {
   private[operators] def readCfb(doc: Cfb.CfbDoc, maxChars: Int = 16 << 20): DocText = {
     val wd = doc.streams.getOrElse("WordDocument", return DocText("part", Seq.empty))
     if (wd.length < 0x01AA) return DocText("fib", Seq.empty)
-    if (u16(wd, 0) != 0xA5EC) return DocText("fib", Seq.empty)
-    val flags = u16(wd, 0x0A)
+    if (u16le(wd, 0) != 0xA5EC) return DocText("fib", Seq.empty)
+    val flags = u16le(wd, 0x0A)
     if ((flags & FEncrypted) != 0) return DocText("encrypted", Seq.empty)
-    val ccpText = u32(wd, 0x4C)
-    val fcClx = u32(wd, 0x01A2)
-    val lcbClx = u32(wd, 0x01A6)
+    val ccpText = u32le(wd, 0x4C)
+    val fcClx = u32le(wd, 0x01A2)
+    val lcbClx = u32le(wd, 0x01A6)
     val tableName = if ((flags & FWhichTblStm) != 0) "1Table" else "0Table"
     val table = doc.streams.getOrElse(tableName, return DocText("clx", Seq.empty))
     if (fcClx + lcbClx > table.length || lcbClx < 5) return DocText("clx", Seq.empty)
@@ -79,15 +74,15 @@ object Doc {
     val end = (fcClx + lcbClx).toInt
     while (i < end && table(i) == 0x01) {
       if (i + 3 > end) return DocText("clx", Seq.empty)
-      i += 3 + u16(table, i + 1)
+      i += 3 + u16le(table, i + 1)
     }
     if (i + 5 > end || table(i) != 0x02) return DocText("clx", Seq.empty)
-    val lcbPlc = u32(table, i + 1)
+    val lcbPlc = u32le(table, i + 1)
     i += 5
     if (i + lcbPlc > end || lcbPlc < 16 || (lcbPlc - 4) % 12 != 0)
       return DocText("clx", Seq.empty)
     val n = ((lcbPlc - 4) / 12).toInt
-    val cps = (0 to n).map(k => u32(table, i + k * 4))
+    val cps = (0 to n).map(k => u32le(table, i + k * 4))
     val pcdOff = i + (n + 1) * 4
     if (!cps.sliding(2).forall(p => p(1) >= p(0))) return DocText("clx", Seq.empty)
 
@@ -97,7 +92,7 @@ object Doc {
       val cpStart = cps(k)
       val cpEnd = math.min(cps(k + 1), ccpText) // main document text only
       if (cpEnd > cpStart) {
-        val fcRaw = u32(table, pcdOff + k * 8 + 2)
+        val fcRaw = u32le(table, pcdOff + k * 8 + 2)
         val compressed = (fcRaw & 0x40000000L) != 0
         val fc = fcRaw & 0x3FFFFFFFL
         // the span is attacker-controlled u32 arithmetic (cps and
@@ -250,10 +245,6 @@ object Doc {
     Cfb.cfb(Seq(("WordDocument", wd), ("0Table", clx)))
   }
 
-  private def w16(b: Array[Byte], off: Int, v: Int): Unit = {
-    b(off) = (v & 0xFF).toByte; b(off + 1) = ((v >> 8) & 0xFF).toByte
-  }
-
-  private def w32(b: Array[Byte], off: Int, v: Long): Unit =
-    (0 until 4).foreach(i => b(off + i) = ((v >> (8 * i)) & 0xFF).toByte)
+  private def w16(b: Array[Byte], off: Int, v: Int): Unit = System.arraycopy(Bytes.le(v, 2), 0, b, off, 2)
+  private def w32(b: Array[Byte], off: Int, v: Long): Unit = System.arraycopy(Bytes.le(v, 4), 0, b, off, 4)
 }

@@ -24,6 +24,8 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
+  import Bytes.{i32be, i32le, u16be, u16le, u24be, u32be, u32le, u8}
+
   /** A decoded media record: fixed-shape features + metadata. */
   final case class MediaFeatures(
       media_id: Long,
@@ -148,17 +150,13 @@ object Multimodal {
     */
   def decodeBmp(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
     if (bytes.length < 54 || bytes(0) != 'B' || bytes(1) != 'M') return None
-    def le32(o: Int): Int =
-      (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8) |
-        ((bytes(o + 2) & 0xFF) << 16) | ((bytes(o + 3) & 0xFF) << 24)
-    def le16(o: Int): Int = (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
-    val dataOff = le32(10)
-    if (le32(14) < 40) return None // pre-BITMAPINFOHEADER variants
-    val w = le32(18)
-    val hRaw = le32(22)
+    val dataOff = i32le(bytes, 10)
+    if (i32le(bytes, 14) < 40) return None // pre-BITMAPINFOHEADER variants
+    val w = i32le(bytes, 18)
+    val hRaw = i32le(bytes, 22)
     val topDown = hRaw < 0
     val h = math.abs(hRaw)
-    if (w <= 0 || h <= 0 || le16(28) != 24 || le32(30) != 0) return None
+    if (w <= 0 || h <= 0 || u16le(bytes, 28) != 24 || i32le(bytes, 30) != 0) return None
     if (w.toLong * h * 3 > Int.MaxValue) return None
     val stride = ((w * 3 + 3) / 4) * 4
     if (dataOff < 54 || stride.toLong * h + dataOff > bytes.length) return None
@@ -259,24 +257,21 @@ object Multimodal {
       if (bytes(0) == 'I' && bytes(1) == 'I') true
       else if (bytes(0) == 'M' && bytes(1) == 'M') false
       else return None
-    def u16(o: Int): Int =
-      if (le) (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
-      else ((bytes(o) & 0xFF) << 8) | (bytes(o + 1) & 0xFF)
-    def u32(o: Int): Long =
-      if (le) u16(o).toLong | (u16(o + 2).toLong << 16)
-      else (u16(o).toLong << 16) | u16(o + 2).toLong
-    if (u16(2) != 42) return None
-    val ifd = u32(4)
+    // every field reads in the byte order the header declared
+    def rd16(o: Int): Int = if (le) u16le(bytes, o) else u16be(bytes, o)
+    def rd32(o: Int): Long = if (le) u32le(bytes, o) else u32be(bytes, o)
+    if (rd16(2) != 42) return None
+    val ifd = rd32(4)
     if (ifd < 8 || ifd + 2 > bytes.length) return None
-    val n = u16(ifd.toInt)
+    val n = rd16(ifd.toInt)
     if (ifd + 2 + 12L * n + 4 > bytes.length) return None
     val tags = scala.collection.mutable.Map.empty[Int, IndexedSeq[Long]]
     var e = 0
     while (e < n) {
       val off = ifd.toInt + 2 + 12 * e
-      val tag = u16(off)
-      val typ = u16(off + 2)
-      val cnt = u32(off + 4)
+      val tag = rd16(off)
+      val typ = rd16(off + 2)
+      val cnt = rd32(off + 4)
       val sz = typ match { case 1 => 1; case 3 => 2; case 4 => 4; case _ => 0 }
       if (sz > 0) { // unsupported value types (rationals, ascii) are skipped
         if (cnt < 0 || cnt > 65536) return None
@@ -284,7 +279,7 @@ object Multimodal {
         val base =
           if (total <= 4) off + 8L
           else {
-            val o = u32(off + 8)
+            val o = rd32(off + 8)
             if (o + total > bytes.length) return None
             o
           }
@@ -292,8 +287,8 @@ object Multimodal {
           val vo = (base + sz * j).toInt
           sz match {
             case 1 => (bytes(vo) & 0xFF).toLong
-            case 2 => u16(vo).toLong
-            case _ => u32(vo)
+            case 2 => rd16(vo).toLong
+            case _ => rd32(vo)
           }
         }.toIndexedSeq
       }
@@ -374,12 +369,8 @@ object Multimodal {
         data, s * rps * w * spp, s * rps * w * spp + rows * w * spp)
     }
     val out = new java.io.ByteArrayOutputStream()
-    def p16(v: Int): Unit =
-      if (bigEndian) { out.write((v >> 8) & 0xFF); out.write(v & 0xFF) }
-      else { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
-    def p32(v: Int): Unit =
-      if (bigEndian) { p16((v >>> 16) & 0xFFFF); p16(v & 0xFFFF) }
-      else { p16(v & 0xFFFF); p16((v >>> 16) & 0xFFFF) }
+    def p16(v: Int): Unit = out.write(if (bigEndian) Bytes.be(v, 2) else Bytes.le(v, 2))
+    def p32(v: Int): Unit = out.write(if (bigEndian) Bytes.be(v, 4) else Bytes.le(v, 4))
     out.write(if (bigEndian) 'M' else 'I'); out.write(if (bigEndian) 'M' else 'I')
     p16(42); // magic
     val stripOffs = strips.scanLeft(8)((acc, st) => acc + st.length)
@@ -451,11 +442,9 @@ object Multimodal {
     if (bytes.length < 13) return None
     val sig = new String(bytes, 0, 6, "US-ASCII")
     if (sig != "GIF87a" && sig != "GIF89a") return None
-    def u8(o: Int): Int = bytes(o) & 0xFF
-    def le16(o: Int): Int = u8(o) | (u8(o + 1) << 8)
     var p = 6
-    val screenW = le16(p); val screenH = le16(p + 2); p += 4
-    val lsdFlags = u8(p); p += 3 // flags, bg index, aspect
+    val screenW = u16le(bytes, p); val screenH = u16le(bytes, p + 2); p += 4
+    val lsdFlags = u8(bytes, p); p += 3 // flags, bg index, aspect
     var globalPal: Array[Byte] = null
     if ((lsdFlags & 0x80) != 0) {
       val n = 2 << (lsdFlags & 7)
@@ -464,18 +453,18 @@ object Multimodal {
       p += 3 * n
     }
     while (p < bytes.length) {
-      u8(p) match {
+      u8(bytes, p) match {
         case 0x3B => return None // trailer before any image
         case 0x21 => // extension: label + sub-blocks
           p += 2
-          while (p < bytes.length && u8(p) != 0) p += 1 + u8(p)
+          while (p < bytes.length && u8(bytes, p) != 0) p += 1 + u8(bytes, p)
           if (p >= bytes.length) return None
           p += 1
         case 0x2C => // image descriptor
           if (p + 10 > bytes.length) return None
-          val left = le16(p + 1); val top = le16(p + 3)
-          val w = le16(p + 5); val h = le16(p + 7)
-          val idFlags = u8(p + 9)
+          val left = u16le(bytes, p + 1); val top = u16le(bytes, p + 3)
+          val w = u16le(bytes, p + 5); val h = u16le(bytes, p + 7)
+          val idFlags = u8(bytes, p + 9)
           p += 10
           if (w <= 0 || h <= 0 || w.toLong * h > (1L << 26)) return None
           // frame-local geometry only covers the full screen: an offset
@@ -493,12 +482,12 @@ object Multimodal {
           if (pal == null) return None
           val interlaced = (idFlags & 0x40) != 0
           if (p >= bytes.length) return None
-          val minCode = u8(p); p += 1
+          val minCode = u8(bytes, p); p += 1
           if (minCode < 2 || minCode > 11) return None
           // concatenate the data sub-blocks
           val data = new java.io.ByteArrayOutputStream()
-          while (p < bytes.length && u8(p) != 0) {
-            val n = u8(p)
+          while (p < bytes.length && u8(bytes, p) != 0) {
+            val n = u8(bytes, p)
             if (p + 1 + n > bytes.length) return None
             data.write(bytes, p + 1, n)
             p += 1 + n
@@ -670,8 +659,7 @@ object Multimodal {
     val eoi = clear + 1
     val out = new java.io.ByteArrayOutputStream()
     out.write("GIF89a".getBytes("US-ASCII"))
-    def le16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
-    le16(w); le16(h)
+    out.write(Bytes.le(w, 2)); out.write(Bytes.le(h, 2))
     out.write(0x80 | (minCode - 1)) // global table, 2^7 entries
     out.write(0); out.write(0)      // bg index, aspect
     var i = 0
@@ -680,7 +668,7 @@ object Multimodal {
       i += 1
     }
     out.write(0x2C) // image descriptor
-    le16(0); le16(0); le16(w); le16(h)
+    out.write(Bytes.le(0, 4)); out.write(Bytes.le(w, 2)); out.write(Bytes.le(h, 2))
     out.write(if (interlaced) 0x40 else 0x00)
     out.write(minCode)
     // pixel indices in STORED row order (interlaced: four-pass)
@@ -767,8 +755,6 @@ object Multimodal {
     */
   def decodeJpeg(bytes: Array[Byte]): Option[(Int, Int, Array[Byte])] = try {
     if (bytes.length < 4 || bytes(0) != 0xFF.toByte || bytes(1) != 0xD8.toByte) return None
-    def u8(o: Int): Int = bytes(o) & 0xFF
-    def u16(o: Int): Int = (u8(o) << 8) | u8(o + 1)
 
     val quant = Array.ofDim[Int](4, 64) // zigzag order, as stored
     val quantDefined = new Array[Boolean](4)
@@ -805,54 +791,54 @@ object Multimodal {
     var scanComps: Array[Int] = null         // index into comps
     while (sosAt < 0) {
       if (p + 4 > bytes.length) return None
-      if (u8(p) != 0xFF) return None
-      val marker = u8(p + 1)
+      if (u8(bytes, p) != 0xFF) return None
+      val marker = u8(bytes, p + 1)
       if (marker == 0xD8) { p += 2 } // stray SOI
       else {
-        val len = u16(p + 2)
+        val len = u16be(bytes, p + 2)
         if (p + 2 + len > bytes.length) return None
         marker match {
           case 0xDB => // DQT
             var o = p + 4
             while (o < p + 2 + len) {
-              val pq = u8(o) >> 4; val tq = u8(o) & 15
+              val pq = u8(bytes, o) >> 4; val tq = u8(bytes, o) & 15
               if (tq > 3) return None
               var i = 0
-              if (pq == 0) { while (i < 64) { quant(tq)(i) = u8(o + 1 + i); i += 1 }; o += 65 }
-              else { while (i < 64) { quant(tq)(i) = u16(o + 1 + 2 * i); i += 1 }; o += 129 }
+              if (pq == 0) { while (i < 64) { quant(tq)(i) = u8(bytes, o + 1 + i); i += 1 }; o += 65 }
+              else { while (i < 64) { quant(tq)(i) = u16be(bytes, o + 1 + 2 * i); i += 1 }; o += 129 }
               quantDefined(tq) = true
             }
           case 0xC0 => // SOF0 (baseline sequential)
-            if (u8(p + 4) != 8) return None // 8-bit precision only
-            h = u16(p + 5); w = u16(p + 7)
-            nComp = u8(p + 9)
+            if (u8(bytes, p + 4) != 8) return None // 8-bit precision only
+            h = u16be(bytes, p + 5); w = u16be(bytes, p + 7)
+            nComp = u8(bytes, p + 9)
             if (w <= 0 || h <= 0 || (nComp != 1 && nComp != 3)) return None
             comps = Array.tabulate(nComp) { i =>
               val o = p + 10 + 3 * i
-              Comp(u8(o), u8(o + 1) >> 4, u8(o + 1) & 15, u8(o + 2))
+              Comp(u8(bytes, o), u8(bytes, o + 1) >> 4, u8(bytes, o + 1) & 15, u8(bytes, o + 2))
             }
             if (comps.exists(c => c.hs < 1 || c.hs > 2 || c.vs < 1 || c.vs > 2))
               return None
           case 0xC4 => // DHT
             var o = p + 4
             while (o < p + 2 + len) {
-              val tc = u8(o) >> 4; val th = u8(o) & 15
+              val tc = u8(bytes, o) >> 4; val th = u8(bytes, o) & 15
               if (tc > 1 || th > 3) return None
-              val bits = Array.tabulate(16)(i => u8(o + 1 + i))
+              val bits = Array.tabulate(16)(i => u8(bytes, o + 1 + i))
               val n = bits.sum
               val vals = java.util.Arrays.copyOfRange(bytes, o + 17, o + 17 + n)
               huff(tc)(th) = buildHuff(bits, vals)
               o += 17 + n
             }
-          case 0xDD => restartInterval = u16(p + 4) // DRI
+          case 0xDD => restartInterval = u16be(bytes, p + 4) // DRI
           case 0xDA => // SOS
-            val ns = u8(p + 4)
+            val ns = u8(bytes, p + 4)
             if (comps == null || ns != nComp) return None
             scanComps = new Array[Int](ns)
             scanTables = new Array[(Int, Int)](ns)
             var i = 0
             while (i < ns) {
-              val cid = u8(p + 5 + 2 * i); val tt = u8(p + 6 + 2 * i)
+              val cid = u8(bytes, p + 5 + 2 * i); val tt = u8(bytes, p + 6 + 2 * i)
               val ci = comps.indexWhere(_.id == cid)
               if (ci < 0) return None
               scanComps(i) = ci
@@ -888,9 +874,9 @@ object Multimodal {
     def readBit(): Int = {
       if (nBits == 0) {
         if (bp >= bytes.length) throw new IllegalStateException("eof")
-        var b = u8(bp); bp += 1
+        var b = u8(bytes, bp); bp += 1
         if (b == 0xFF) {
-          val b2 = if (bp < bytes.length) u8(bp) else 0xD9
+          val b2 = if (bp < bytes.length) u8(bytes, bp) else 0xD9
           if (b2 == 0x00) bp += 1
           else { bp -= 1; b = 0 } // marker mid-read (truncated stream):
           // hold bp AT the 0xFF so every further fill keeps yielding
@@ -983,7 +969,7 @@ object Multimodal {
         // byte-align and consume the RSTn marker; DC predictors reset
         nBits = 0
         while (bp + 1 < bytes.length &&
-          !(u8(bp) == 0xFF && u8(bp + 1) >= 0xD0 && u8(bp + 1) <= 0xD7)) bp += 1
+          !(u8(bytes, bp) == 0xFF && u8(bytes, bp + 1) >= 0xD0 && u8(bytes, bp + 1) <= 0xD7)) bp += 1
         if (bp + 1 >= bytes.length) throw new IllegalStateException("missing RST")
         bp += 2
         java.util.Arrays.fill(dcPred, 0)
@@ -1234,13 +1220,8 @@ object Multimodal {
     require(seed >= 0 && w > 0 && h > 0, "syntheticBmp: non-negative seed, positive dims")
     val stride = ((w * 3 + 3) / 4) * 4
     val out = new Array[Byte](54 + stride * h)
-    def p32(o: Int, v: Int): Unit = {
-      out(o) = (v & 0xFF).toByte; out(o + 1) = ((v >> 8) & 0xFF).toByte
-      out(o + 2) = ((v >> 16) & 0xFF).toByte; out(o + 3) = ((v >>> 24) & 0xFF).toByte
-    }
-    def p16(o: Int, v: Int): Unit = {
-      out(o) = (v & 0xFF).toByte; out(o + 1) = ((v >> 8) & 0xFF).toByte
-    }
+    def p32(o: Int, v: Int): Unit = System.arraycopy(Bytes.le(v, 4), 0, out, o, 4)
+    def p16(o: Int, v: Int): Unit = System.arraycopy(Bytes.le(v, 2), 0, out, o, 2)
     out(0) = 'B'; out(1) = 'M'
     p32(2, out.length); p32(10, 54); p32(14, 40)
     p32(18, w); p32(22, h)
@@ -1384,22 +1365,19 @@ object Multimodal {
     val sig = Array(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A)
     if (bytes.length < 8 + 25 || !sig.indices.forall(j => (bytes(j) & 0xFF) == sig(j)))
       return None
-    def be32(o: Int): Int =
-      ((bytes(o) & 0xFF) << 24) | ((bytes(o + 1) & 0xFF) << 16) |
-        ((bytes(o + 2) & 0xFF) << 8) | (bytes(o + 3) & 0xFF)
     var w = 0; var h = 0; var colorType = -1
     var palette: Array[Byte] = null
     val idat = new java.io.ByteArrayOutputStream()
     var p = 8
     var done = false
     while (!done && p + 8 <= bytes.length) {
-      val len = be32(p)
+      val len = i32be(bytes, p)
       if (len < 0 || p + 12 + len.toLong > bytes.length) return None
       val ctype = new String(bytes, p + 4, 4, "US-ASCII")
       ctype match {
         case "IHDR" =>
           if (len < 13) return None
-          w = be32(p + 8); h = be32(p + 12)
+          w = i32be(bytes, p + 8); h = i32be(bytes, p + 12)
           val bitDepth = bytes(p + 16) & 0xFF
           colorType = bytes(p + 17) & 0xFF
           val (compression, filterM, interlace) =
@@ -1524,34 +1502,21 @@ object Multimodal {
       }
       y += 1
     }
-    val deflated = {
-      val d = new java.util.zip.Deflater()
-      d.setInput(raw); d.finish()
-      val buf = new java.io.ByteArrayOutputStream()
-      val tmp = new Array[Byte](4096)
-      while (!d.finished()) buf.write(tmp, 0, d.deflate(tmp))
-      d.end()
-      buf.toByteArray
-    }
+    val deflated = Bytes.deflate(raw, raw = false)
     val out = new java.io.ByteArrayOutputStream()
     out.write(Array(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte), 0, 8)
     def chunk(ctype: String, data: Array[Byte]): Unit = {
-      def be32(v: Int): Array[Byte] = Array(
-        (v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-      out.write(be32(data.length), 0, 4)
+      out.write(Bytes.be(data.length, 4))
       val tb = ctype.getBytes("US-ASCII")
       out.write(tb, 0, 4)
       out.write(data, 0, data.length)
       val crc = new java.util.zip.CRC32()
       crc.update(tb); crc.update(data)
-      out.write(be32(crc.getValue.toInt), 0, 4)
+      out.write(Bytes.be(crc.getValue, 4))
     }
-    val ihdr = new Array[Byte](13)
-    ihdr(0) = (w >>> 24).toByte; ihdr(1) = (w >>> 16).toByte
-    ihdr(2) = (w >>> 8).toByte; ihdr(3) = w.toByte
-    ihdr(4) = (h >>> 24).toByte; ihdr(5) = (h >>> 16).toByte
-    ihdr(6) = (h >>> 8).toByte; ihdr(7) = h.toByte
-    ihdr(8) = 8; ihdr(9) = 2 // bit depth 8, color type 2 (RGB)
+    // bit depth 8, color type 2 (RGB), then compression, filter and
+    // interlace all 0
+    val ihdr = Bytes.be(w, 4) ++ Bytes.be(h, 4) ++ Array[Byte](8, 2, 0, 0, 0)
     chunk("IHDR", ihdr)
     chunk("IDAT", deflated)
     chunk("IEND", Array.emptyByteArray)
@@ -1633,25 +1598,6 @@ object Multimodal {
       sum_c0: Long, ssq_c0: Long, zc_c0: Long,
       sum_c1: Long, ssq_c1: Long, zc_c1: Long)
 
-  /** Pure-JVM RIFF/WAVE PCM decoder — the audio analog of [[decodePpm]],
-    * no codec dependency: `RIFF <size> WAVE`, then a chunk walk for
-    * `fmt ` (must be audioFormat 1 = integer PCM; 16-bit signed or
-    * 8-bit unsigned samples) and `data` (little-endian interleaved
-    * frames). 8-bit samples normalize into the 16-bit signed space as
-    * (b − 128)·256, so every consumer sees one sample domain. Trailing
-    * partial frames and odd-size chunk padding are handled per the
-    * RIFF spec; anything malformed — wrong magic, missing/short
-    * chunks, non-PCM, unsupported depth, non-positive layout — returns
-    * None so corrupt payloads degrade to the header sniff instead of
-    * throwing mid-partition.
-    */
-  /** Little-endian readers over a byte array — the RIFF family's
-    * shared primitives. */
-  private def wavLe16(bytes: Array[Byte], o: Int): Int =
-    (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
-  private def wavLe32(bytes: Array[Byte], o: Int): Int =
-    wavLe16(bytes, o) | (wavLe16(bytes, o + 2) << 16)
-
   /** The ONE RIFF/WAVE chunk walk all three WAV decoders (PCM, IMA
     * ADPCM, G.711) share: word-aligned chunk sizes, bounds-checked,
     * stopping once both `fmt ` (≥ 16 bytes) and `data` are found.
@@ -1667,7 +1613,7 @@ object Multimodal {
     var dataOff = -1; var dataLen = -1
     var i = 12
     while (i + 8 <= bytes.length && (dataOff < 0 || fmtOff < 0)) {
-      val sz = wavLe32(bytes, i + 4)
+      val sz = i32le(bytes, i + 4)
       if (sz < 0 || i + 8 + sz.toLong > bytes.length) return None
       if (tag(i, "fmt ") && sz >= 16) fmtOff = i + 8
       else if (tag(i, "data")) { dataOff = i + 8; dataLen = sz }
@@ -1688,11 +1634,8 @@ object Multimodal {
       dataLen: Int): (Array[Byte], Int) = {
     val fmtLen = 16 + extra.length
     val out = new Array[Byte](12 + 8 + fmtLen + 8 + dataLen)
-    def p32(o: Int, v: Int): Unit = {
-      out(o) = v.toByte; out(o + 1) = (v >> 8).toByte
-      out(o + 2) = (v >> 16).toByte; out(o + 3) = (v >>> 24).toByte
-    }
-    def p16(o: Int, v: Int): Unit = { out(o) = v.toByte; out(o + 1) = (v >> 8).toByte }
+    def p32(o: Int, v: Int): Unit = System.arraycopy(Bytes.le(v, 4), 0, out, o, 4)
+    def p16(o: Int, v: Int): Unit = System.arraycopy(Bytes.le(v, 2), 0, out, o, 2)
     def ptag(o: Int, s: String): Unit =
       s.zipWithIndex.foreach { case (ch, j) => out(o + j) = ch.toByte }
     ptag(0, "RIFF"); p32(4, out.length - 8); ptag(8, "WAVE")
@@ -1707,19 +1650,30 @@ object Multimodal {
 
   /** Little-endian int16 write — the fixtures' payload companion to
     * [[wavScaffold]]. */
-  private def wavPut16(buf: Array[Byte], o: Int, v: Int): Unit = {
-    buf(o) = v.toByte; buf(o + 1) = (v >> 8).toByte
-  }
+  private def wavPut16(buf: Array[Byte], o: Int, v: Int): Unit =
+    System.arraycopy(Bytes.le(v, 2), 0, buf, o, 2)
 
+  /** Pure-JVM RIFF/WAVE PCM decoder — the audio analog of [[decodePpm]],
+    * no codec dependency: `RIFF <size> WAVE`, then a chunk walk for
+    * `fmt ` (must be audioFormat 1 = integer PCM; 16-bit signed or
+    * 8-bit unsigned samples) and `data` (little-endian interleaved
+    * frames). 8-bit samples normalize into the 16-bit signed space as
+    * (b − 128)·256, so every consumer sees one sample domain. Trailing
+    * partial frames and odd-size chunk padding are handled per the
+    * RIFF spec; anything malformed — wrong magic, missing/short
+    * chunks, non-PCM, unsupported depth, non-positive layout — returns
+    * None so corrupt payloads degrade to the header sniff instead of
+    * throwing mid-partition.
+    */
   def decodeWav(bytes: Array[Byte]): Option[(Int, Int, Array[Short])] = {
     val (fmt, dataOff, dataLen) = riffWaveChunks(bytes) match {
       case Some(t) => t
       case None    => return None
     }
-    if (wavLe16(bytes, fmt) != 1) return None // integer PCM only
-    val channels = wavLe16(bytes, fmt + 2)
-    val rate = wavLe32(bytes, fmt + 4)
-    val bits = wavLe16(bytes, fmt + 14)
+    if (u16le(bytes, fmt) != 1) return None // integer PCM only
+    val channels = u16le(bytes, fmt + 2)
+    val rate = i32le(bytes, fmt + 4)
+    val bits = u16le(bytes, fmt + 14)
     if (channels <= 0 || rate <= 0 || (bits != 16 && bits != 8)) return None
     val sampleBytes = bits / 8
     val frameBytes = channels * sampleBytes
@@ -1766,18 +1720,18 @@ object Multimodal {
       case Some(t) => t
       case None    => return None
     }
-    if (wavLe16(bytes, fmt) != 0x11) return None // IMA/DVI ADPCM only
-    val channels = wavLe16(bytes, fmt + 2)
-    val rate = wavLe32(bytes, fmt + 4)
-    val blockAlign = wavLe16(bytes, fmt + 12)
-    val bits = wavLe16(bytes, fmt + 14)
+    if (u16le(bytes, fmt) != 0x11) return None // IMA/DVI ADPCM only
+    val channels = u16le(bytes, fmt + 2)
+    val rate = i32le(bytes, fmt + 4)
+    val blockAlign = u16le(bytes, fmt + 12)
+    val bits = u16le(bytes, fmt + 14)
     if (channels != 1 || rate <= 0 || bits != 4 || blockAlign < 5)
       return None
     val out = scala.collection.mutable.ArrayBuffer.empty[Short]
     var bo = 0
     while (bo + 4 <= dataLen) {
       val blockLen = math.min(blockAlign, dataLen - bo)
-      var pred = wavLe16(bytes, dataOff + bo).toShort.toInt // sign-extended
+      var pred = u16le(bytes, dataOff + bo).toShort.toInt // sign-extended
       var idx = bytes(dataOff + bo + 2) & 0xFF
       if (idx > 88) return None
       out += pred.toShort // the header predictor is the first sample
@@ -1871,11 +1825,11 @@ object Multimodal {
       case Some(t) => t
       case None    => return None
     }
-    if (wavLe16(bytes, fmt) != 2) return None // MS ADPCM only
-    val channels = wavLe16(bytes, fmt + 2)
-    val rate = wavLe32(bytes, fmt + 4)
-    val blockAlign = wavLe16(bytes, fmt + 12)
-    val bits = wavLe16(bytes, fmt + 14)
+    if (u16le(bytes, fmt) != 2) return None // MS ADPCM only
+    val channels = u16le(bytes, fmt + 2)
+    val rate = i32le(bytes, fmt + 4)
+    val blockAlign = u16le(bytes, fmt + 12)
+    val bits = u16le(bytes, fmt + 14)
     if (channels < 1 || channels > 2 || rate <= 0 || bits != 4 ||
         blockAlign < 7 * channels)
       return None
@@ -1892,10 +1846,10 @@ object Multimodal {
         val p = bytes(base + ch) & 0xFF
         if (p > 6) return None
         c1(ch) = MsCoef1(p); c2(ch) = MsCoef2(p)
-        delta(ch) = wavLe16(bytes, base + channels + 2 * ch).toShort.toInt
+        delta(ch) = u16le(bytes, base + channels + 2 * ch).toShort.toInt
         if (delta(ch) <= 0) return None
-        s1(ch) = wavLe16(bytes, base + 3 * channels + 2 * ch).toShort.toInt
-        s2(ch) = wavLe16(bytes, base + 5 * channels + 2 * ch).toShort.toInt
+        s1(ch) = u16le(bytes, base + 3 * channels + 2 * ch).toShort.toInt
+        s2(ch) = u16le(bytes, base + 5 * channels + 2 * ch).toShort.toInt
         ch += 1
       }
       // the two header samples lead the block, OLDER first
@@ -1998,11 +1952,11 @@ object Multimodal {
       case Some(t) => t
       case None    => return None
     }
-    val law = wavLe16(bytes, fmt)
+    val law = u16le(bytes, fmt)
     if (law != 6 && law != 7) return None // A-law / μ-law only
-    val channels = wavLe16(bytes, fmt + 2)
-    val rate = wavLe32(bytes, fmt + 4)
-    val bits = wavLe16(bytes, fmt + 14)
+    val channels = u16le(bytes, fmt + 2)
+    val rate = i32le(bytes, fmt + 4)
+    val bits = u16le(bytes, fmt + 14)
     if (channels <= 0 || rate <= 0 || bits != 8) return None
     val frames = dataLen / channels // drop a trailing partial frame
     val out = new Array[Short](frames * channels)
@@ -2082,26 +2036,23 @@ object Multimodal {
   def decodeFlac(bytes: Array[Byte]): Option[(Int, Int, Array[Short])] = try {
     if (bytes.length < 42 || bytes(0) != 'f' || bytes(1) != 'L' ||
       bytes(2) != 'a' || bytes(3) != 'C') return None
-    def u8(o: Int): Int = bytes(o) & 0xFF
     // ---- metadata walk ----
     var p = 4
     var last = false
     var rate = -1; var nCh = -1; var bps = -1; var total = -1L
     while (!last) {
       if (p + 4 > bytes.length) return None
-      val hdr = u8(p)
+      val hdr = u8(bytes, p)
       last = (hdr & 0x80) != 0
       val btype = hdr & 0x7F
-      val blen = (u8(p + 1) << 16) | (u8(p + 2) << 8) | u8(p + 3)
+      val blen = u24be(bytes, p + 1)
       if (p + 4 + blen > bytes.length) return None
       if (btype == 0 && blen >= 34) { // STREAMINFO
         val o = p + 4
-        rate = (u8(o + 10) << 12) | (u8(o + 11) << 4) | (u8(o + 12) >> 4)
-        nCh = ((u8(o + 12) >> 1) & 7) + 1
-        bps = (((u8(o + 12) & 1) << 4) | (u8(o + 13) >> 4)) + 1
-        total = ((u8(o + 13) & 0xF).toLong << 32) |
-          ((u8(o + 14).toLong << 24) | (u8(o + 15).toLong << 16) |
-            (u8(o + 16).toLong << 8) | u8(o + 17).toLong)
+        rate = (u8(bytes, o + 10) << 12) | (u8(bytes, o + 11) << 4) | (u8(bytes, o + 12) >> 4)
+        nCh = ((u8(bytes, o + 12) >> 1) & 7) + 1
+        bps = (((u8(bytes, o + 12) & 1) << 4) | (u8(bytes, o + 13) >> 4)) + 1
+        total = (u8(bytes, o + 13) & 0xF).toLong << 32 | u32be(bytes, o + 14)
       }
       p += 4 + blen
     }
@@ -2113,7 +2064,7 @@ object Multimodal {
     def bitsLeft: Long = endBit.toLong - bitPos
     def readBit(): Int = {
       if (bitPos >= endBit) throw new IllegalStateException("eof")
-      val v = (u8(bitPos >> 3) >> (7 - (bitPos & 7))) & 1
+      val v = (u8(bytes, bitPos >> 3) >> (7 - (bitPos & 7))) & 1
       bitPos += 1
       v
     }
@@ -2337,7 +2288,7 @@ object Multimodal {
     // ---- stream header + STREAMINFO ----
     out.write('f'); out.write('L'); out.write('a'); out.write('C')
     out.write(0x80); out.write(0); out.write(0); out.write(34) // last block, type 0, len 34
-    def w16(v: Int): Unit = { out.write(v >> 8); out.write(v & 0xFF) }
+    def w16(v: Int): Unit = out.write(Bytes.be(v, 2))
     w16(n); w16(n) // min/max blocksize
     out.write(0); out.write(0); out.write(0) // min framesize unknown
     out.write(0); out.write(0); out.write(0) // max framesize unknown
@@ -2472,25 +2423,23 @@ object Multimodal {
     * return None — the degrade-don't-throw contract throughout.
     */
   def decodeAviMjpeg(bytes: Array[Byte]): Option[(Int, Int, Seq[Array[Byte]])] = try {
-    def le32(o: Int): Int =
-      (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8) |
-        ((bytes(o + 2) & 0xFF) << 16) | ((bytes(o + 3) & 0xFF) << 24)
     def tag(o: Int, s: String): Boolean =
       o + 4 <= bytes.length && s.zipWithIndex.forall { case (c, j) => bytes(o + j) == c.toByte }
     if (bytes.length < 12 || !tag(0, "RIFF") || !tag(8, "AVI ")) return None
     val chunks = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
-    def walk(start: Int, end: Int): Unit = {
+    def walk(start: Int, end: Int, depth: Int): Unit = {
+      if (depth > 64) return // crafted LIST nesting: degrade, not overflow the stack
       var i = start
       while (i + 8 <= end) {
-        val sz = le32(i + 4)
+        val sz = i32le(bytes, i + 4)
         if (sz < 0 || i + 8 + sz.toLong > end) return // truncated: stop
-        if (tag(i, "LIST")) walk(i + 12, i + 8 + sz)
+        if (tag(i, "LIST")) walk(i + 12, i + 8 + sz, depth + 1)
         else if (tag(i, "00dc") || tag(i, "00db"))
           chunks += java.util.Arrays.copyOfRange(bytes, i + 8, i + 8 + sz)
         i += 8 + sz + (sz & 1) // RIFF chunks are word-aligned
       }
     }
-    walk(12, math.min(bytes.length, 8 + le32(4).max(0)))
+    walk(12, math.min(bytes.length, 8 + i32le(bytes, 4).max(0)), 0)
     if (chunks.isEmpty) return None
     val decoded = chunks.map(decodeJpeg)
     if (decoded.exists(_.isEmpty)) return None
@@ -2553,26 +2502,24 @@ object Multimodal {
   def syntheticAviMjpeg(seed: Long, frames: Int): Array[Byte] = {
     require(seed >= 0 && frames > 0, "syntheticAviMjpeg: non-negative seed, positive frames")
     val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Array[Byte] =
-      Array(v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >>> 24).toByte)
     def chunk(t: String, d: Array[Byte]): Array[Byte] = {
       val pad = if (d.length % 2 == 1) Array[Byte](0) else Array.emptyByteArray
-      t.getBytes("US-ASCII") ++ le32(d.length) ++ d ++ pad
+      t.getBytes("US-ASCII") ++ Bytes.le(d.length, 4) ++ d ++ pad
     }
     def list(t: String, d: Array[Byte]): Array[Byte] =
-      "LIST".getBytes("US-ASCII") ++ le32(4 + d.length) ++ t.getBytes("US-ASCII") ++ d
+      "LIST".getBytes("US-ASCII") ++ Bytes.le(4 + d.length, 4) ++ t.getBytes("US-ASCII") ++ d
     val avih = new Array[Byte](56)
-    System.arraycopy(le32(66666), 0, avih, 0, 4)  // usec/frame (~15 fps)
-    System.arraycopy(le32(frames), 0, avih, 16, 4)
-    System.arraycopy(le32(1), 0, avih, 24, 4)     // one stream
-    System.arraycopy(le32(16), 0, avih, 32, 4)    // width
-    System.arraycopy(le32(16), 0, avih, 36, 4)    // height
+    System.arraycopy(Bytes.le(66666, 4), 0, avih, 0, 4)  // usec/frame (~15 fps)
+    System.arraycopy(Bytes.le(frames, 4), 0, avih, 16, 4)
+    System.arraycopy(Bytes.le(1, 4), 0, avih, 24, 4)     // one stream
+    System.arraycopy(Bytes.le(16, 4), 0, avih, 32, 4)    // width
+    System.arraycopy(Bytes.le(16, 4), 0, avih, 36, 4)    // height
     val hdrl = list("hdrl", chunk("avih", avih))
     val movi = list("movi",
       (0 until frames).flatMap(f => chunk("00dc", syntheticJpeg(seed * 7 + f))).toArray)
     val body = "AVI ".getBytes("US-ASCII") ++ hdrl ++ movi
     out.write("RIFF".getBytes("US-ASCII"), 0, 4)
-    out.write(le32(body.length), 0, 4)
+    out.write(Bytes.le(body.length, 4), 0, 4)
     out.write(body, 0, body.length)
     out.toByteArray
   }
@@ -3083,8 +3030,7 @@ object Multimodal {
     var p = 12
     while (p + 8 <= bytes.length) {
       val tag = new String(bytes, p, 4, "US-ASCII")
-      val clen = (bytes(p + 4) & 0xFF) | ((bytes(p + 5) & 0xFF) << 8) |
-        ((bytes(p + 6) & 0xFF) << 16) | ((bytes(p + 7) & 0xFF) << 24)
+      val clen = i32le(bytes, p + 4)
       if (clen < 0 || p + 8 + clen.toLong > bytes.length) return None
       if (tag == "VP8L") return decodeVp8l(bytes, p + 8, clen, maxPixels)
       if (tag == "VP8 ") return None // lossy: the perceptual honest boundary
@@ -3321,14 +3267,10 @@ object Multimodal {
   /** RIFF/WEBP wrapper around one VP8L payload (chunks pad to even). */
   private def riffWebp(payload: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Unit = {
-      out.write(v & 0xFF); out.write((v >> 8) & 0xFF)
-      out.write((v >> 16) & 0xFF); out.write((v >>> 24) & 0xFF)
-    }
     val padded = payload.length + (payload.length & 1)
-    out.write("RIFF".getBytes("US-ASCII")); le32(4 + 8 + padded)
+    out.write("RIFF".getBytes("US-ASCII")); out.write(Bytes.le(4 + 8 + padded, 4))
     out.write("WEBP".getBytes("US-ASCII"))
-    out.write("VP8L".getBytes("US-ASCII")); le32(payload.length)
+    out.write("VP8L".getBytes("US-ASCII")); out.write(Bytes.le(payload.length, 4))
     out.write(payload, 0, payload.length)
     if ((payload.length & 1) == 1) out.write(0)
     out.toByteArray
@@ -3445,19 +3387,15 @@ object Multimodal {
     */
   def webpLossyStub(seed: Long): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Unit = {
-      out.write(v & 0xFF); out.write((v >> 8) & 0xFF)
-      out.write((v >> 16) & 0xFF); out.write((v >>> 24) & 0xFF)
-    }
     val body = new Array[Byte](24)
     var s = seed
     body.indices.foreach { i =>
       s = s * 6364136223846793005L + 1442695040888963407L
       body(i) = ((s >>> 33) & 0xFF).toByte
     }
-    out.write("RIFF".getBytes("US-ASCII")); le32(4 + 8 + body.length)
+    out.write("RIFF".getBytes("US-ASCII")); out.write(Bytes.le(4 + 8 + body.length, 4))
     out.write("WEBP".getBytes("US-ASCII"))
-    out.write("VP8 ".getBytes("US-ASCII")); le32(body.length)
+    out.write("VP8 ".getBytes("US-ASCII")); out.write(Bytes.le(body.length, 4))
     out.write(body, 0, body.length)
     out.toByteArray
   }

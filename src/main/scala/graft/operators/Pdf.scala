@@ -25,9 +25,8 @@ import org.apache.spark.sql.DataFrame
   *     literal strings (octal escapes, nested parens, line
   *     continuations, CR/CRLF → LF), hex strings, indirect refs,
   *     streams with indirect `/Length` and an `endstream` rescue scan;
-  *   - `FlateDecode` via the JDK's zlib (`java.util.zip.Inflater` —
-  *     the same platform primitive the PNG path leans on), bounded by
-  *     a bomb cap;
+  *   - `FlateDecode` via the JDK's zlib ([[Bytes.inflate]], shared
+  *     with the other binary walkers), bounded by a bomb cap;
   *   - the page tree (inherited `/Resources`) and the text-showing
   *     content operators: `Tj` `TJ` `'` `"` with `Td`/`TD`/`T*`/`Tm`
   *     line structure, `Tf` font selection;
@@ -692,27 +691,6 @@ object Pdf {
 
   // ---- filters ----
 
-  /** Zlib inflate bounded by a bomb cap; trailing bytes after the
-    * deflate stream are tolerated (writers pad) but corruption is not.
-    */
-  private def inflate(data: Array[Byte], maxOut: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater(false)
-    inf.setInput(data)
-    val out = new ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    try {
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && !inf.finished()) return null
-        out.write(buf, 0, n)
-        if (out.size() > maxOut) return null
-      }
-      out.toByteArray
-    } catch {
-      case _: java.util.zip.DataFormatException => null
-    } finally inf.end()
-  }
-
   /** Undo a /Predictor over 8-bit single-component data: TIFF
     * horizontal differencing (2) and the PNG row filters (10-15 —
     * None/Sub/Up/Average/Paeth at bpp = 1, the same unfilter math the
@@ -785,11 +763,14 @@ object Pdf {
     */
   private def decodeStream(ps: PStream, resolve: PVal => PVal,
       maxOut: Int): Either[String, Array[Byte]] = {
+    // zlib bounded by the bomb cap; trailing bytes after the deflate
+    // stream are tolerated (writers pad) but corruption is not
+    def inflate = Option(Bytes.inflate(ps.raw, 0, raw = false, maxOut)).map(_.bytes).orNull
     val raw = resolve(ps.dict.m.getOrElse("Filter", PNull)) match {
       case PNull => ps.raw
-      case PName("FlateDecode") => inflate(ps.raw, maxOut)
+      case PName("FlateDecode") => inflate
       case PArr(xs) if xs.isEmpty => ps.raw
-      case PArr(xs) if xs == Vector(PName("FlateDecode")) => inflate(ps.raw, maxOut)
+      case PArr(xs) if xs == Vector(PName("FlateDecode")) => inflate
       case _ => return Left("filter")
     }
     if (raw == null) return Left("filter")
@@ -971,7 +952,7 @@ object Pdf {
     }
     def code(b: Array[Byte]): Int =
       if (b.length == 1) b(0) & 0xFF
-      else ((b(0) & 0xFF) << 8) | (b(1) & 0xFF)
+      else Bytes.u16be(b, 0)
     // STRICT decode: the default charset decoder substitutes U+FFFD
     // for malformed input (lone surrogates), which would smuggle a
     // guessed character into the text — report instead, degrading the
@@ -1172,7 +1153,7 @@ object Pdf {
           // simple-encoding slot
           var i = 0
           while (i + 1 < bytes.length) {
-            val code = ((bytes(i) & 0xFF) << 8) | (bytes(i + 1) & 0xFF)
+            val code = Bytes.u16be(bytes, i)
             sb.append(map.getOrElse(code, "�"))
             i += 2
           }
@@ -1657,20 +1638,9 @@ object Pdf {
     else
       s"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding /${pg.encoding} >>"
 
-  private def deflate(data: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    d.setInput(data)
-    d.finish()
-    val out = new ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
-
   /** `<< /Length … >> stream … endstream` body for an object. */
   def streamBody(data: Array[Byte], flate: Boolean): Array[Byte] = {
-    val payload = if (flate) deflate(data) else data
+    val payload = if (flate) Bytes.deflate(data, raw = false) else data
     val head = (s"<< /Length ${payload.length}" +
       (if (flate) " /Filter /FlateDecode" else "") + " >>\nstream\n")
       .getBytes(StandardCharsets.ISO_8859_1)
@@ -1893,15 +1863,7 @@ object Pdf {
       // /First points past the pair header
       val first = header.length
       val stmBody = {
-        val deflated = {
-          val d = new java.util.zip.Deflater()
-          d.setInput(payload); d.finish()
-          val bo = new ByteArrayOutputStream()
-          val buf = new Array[Byte](8192)
-          while (!d.finished()) bo.write(buf, 0, d.deflate(buf))
-          d.end()
-          bo.toByteArray
-        }
+        val deflated = Bytes.deflate(payload, raw = false)
         (s"<< /Type /ObjStm /N ${dictNums.length} /First $first " +
           s"/Filter /FlateDecode /Length ${deflated.length} >>\nstream\n")
           .getBytes(StandardCharsets.ISO_8859_1) ++ deflated ++
@@ -1957,15 +1919,7 @@ object Pdf {
         }
         o.toByteArray
       }
-    val deflatedRows = {
-      val d = new java.util.zip.Deflater()
-      d.setInput(predicted); d.finish()
-      val bo = new ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      while (!d.finished()) bo.write(buf, 0, d.deflate(buf))
-      d.end()
-      bo.toByteArray
-    }
+    val deflatedRows = Bytes.deflate(predicted, raw = false)
     val parms = if (predictor) s" /DecodeParms << /Predictor 12 /Columns $cols >>" else ""
     w(s"$xrefNum 0 obj\n<< /Type /XRef /Size $size /W [1 4 2] /Root 1 0 R " +
       s"/Filter /FlateDecode$parms /Length ${deflatedRows.length} >>\nstream\n")

@@ -73,9 +73,7 @@ object PdfCrypt {
     */
   def fileKey(userPwd: Array[Byte], o: Array[Byte], p: Int, id0: Array[Byte],
       r: Int, keyLen: Int, encMeta: Boolean): Array[Byte] = {
-    val pLe = Array[Byte](
-      (p & 0xFF).toByte, ((p >> 8) & 0xFF).toByte,
-      ((p >> 16) & 0xFF).toByte, ((p >> 24) & 0xFF).toByte)
+    val pLe = Bytes.le(p, 4)
     val tail: Array[Byte] =
       if (r >= 4 && !encMeta) Array(0xFF.toByte, 0xFF.toByte, 0xFF.toByte, 0xFF.toByte)
       else Array.empty
@@ -130,9 +128,7 @@ object PdfCrypt {
     * gen LE16 ‖ "sAlT" for AES), truncated to min(len+5, 16).
     */
   def objectKey(fk: FileKey, num: Int, gen: Int): Array[Byte] = {
-    val ext = Array[Byte](
-      (num & 0xFF).toByte, ((num >> 8) & 0xFF).toByte, ((num >> 16) & 0xFF).toByte,
-      (gen & 0xFF).toByte, ((gen >> 8) & 0xFF).toByte)
+    val ext = Bytes.le(num, 3) ++ Bytes.le(gen, 2)
     val salt: Array[Byte] =
       if (fk.aes) Array(0x73, 0x41, 0x6C, 0x54).map(_.toByte) else Array.empty
     md5(fk.key, ext, salt).take(math.min(fk.key.length + 5, 16))

@@ -343,23 +343,9 @@ object Warc {
     * and degrade the same visible way.
     */
   def inflateZlib(bytes: Array[Byte], maxOut: Int = 64 << 20): Array[Byte] = {
-    if (bytes == null) return null
-    val inf = new java.util.zip.Inflater(false)
-    inf.setInput(bytes)
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    try {
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && !inf.finished()) return null // truncated/needs-dict
-        out.write(buf, 0, n)
-        if (out.size() > maxOut) return null // bomb cap
-      }
-      if (inf.getRemaining != 0) return null // trailing junk
-      out.toByteArray
-    } catch {
-      case _: java.util.zip.DataFormatException => null
-    } finally inf.end()
+    val inf = Bytes.inflate(bytes, 0, raw = false, maxOut)
+    if (inf == null || inf.consumed != bytes.length) null // trailing junk
+    else inf.bytes
   }
 
   /** Decode an HTTP payload from its ON-THE-WIRE form to entity bytes:
@@ -1326,18 +1312,7 @@ object Warc {
   /** Zlib-wrapped deflate (RFC 1950) — the fixtures' encoder twin of
     * [[inflateZlib]].
     */
-  def zlibDeflate(data: Array[Byte]): Array[Byte] = {
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(data); defl.finish()
-    val out = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](data.length + 64)
-    while (!defl.finished()) {
-      val n = defl.deflate(buf)
-      out.write(buf, 0, n)
-    }
-    defl.end()
-    out.toByteArray
-  }
+  def zlibDeflate(data: Array[Byte]): Array[Byte] = Bytes.deflate(data, raw = false)
 
   /** Deterministic ON-THE-WIRE ENCODING fixture: eight response
     * records per blob whose payloads arrive as a real server would

@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.util.zip.CRC32
 
 import org.apache.spark.sql.DataFrame
 
@@ -37,18 +37,13 @@ object ZipShard {
     */
   final case class ZipEntry(name: String, method: Int, usize: Long, data: Array[Byte])
 
-  private def le16(b: Array[Byte], o: Int): Int =
-    (b(o) & 0xFF) | (b(o + 1) & 0xFF) << 8
-  private def le32(b: Array[Byte], o: Int): Long =
-    (b(o) & 0xFFL) | (b(o + 1) & 0xFFL) << 8 |
-      (b(o + 2) & 0xFFL) << 16 | (b(o + 3) & 0xFFL) << 24
-  private def le64(b: Array[Byte], o: Int): Long =
-    le32(b, o) | le32(b, o + 4) << 32
+  import Bytes.{u16le, u32le, u64le}
+
   /** 4- or 8-byte LE read — the descriptor fields' width depends on
     * whether the entry declared zip64.
     */
   private def leN(b: Array[Byte], o: Int, wide: Boolean): Long =
-    if (wide) le64(b, o) else le32(b, o)
+    if (wide) u64le(b, o) else u32le(b, o)
 
   private val LocalSig = 0x04034b50L
   private val CentralSig = 0x02014b50L
@@ -69,18 +64,18 @@ object ZipShard {
     var total = 0L
     var done = false
     while (!done && off + 4 <= bytes.length && n < maxEntries) {
-      val sig = le32(bytes, off)
+      val sig = u32le(bytes, off)
       if (sig == CentralSig || sig == EndSig) done = true // clean end of the local stream
       else if (sig != LocalSig || off + 30 > bytes.length) done = true // junk/torn header
       else {
-        val flags = le16(bytes, off + 6)
-        val method = le16(bytes, off + 8)
+        val flags = u16le(bytes, off + 6)
+        val method = u16le(bytes, off + 8)
         val hasDesc = (flags & 0x08) != 0
-        val crc = le32(bytes, off + 14)
-        var csize = le32(bytes, off + 18)
-        var usize = le32(bytes, off + 22)
-        val nameLen = le16(bytes, off + 26)
-        val extraLen = le16(bytes, off + 28)
+        val crc = u32le(bytes, off + 14)
+        var csize = u32le(bytes, off + 18)
+        var usize = u32le(bytes, off + 22)
+        val nameLen = u16le(bytes, off + 26)
+        val extraLen = u16le(bytes, off + 28)
         val dataAt = off + 30 + nameLen + extraLen
         if (dataAt > bytes.length) done = true // torn before data
         else {
@@ -95,14 +90,14 @@ object ZipShard {
           var ep = off + 30 + nameLen
           val extraEnd = ep + extraLen
           while (ep + 4 <= extraEnd) {
-            val fid = le16(bytes, ep)
-            val fsz = le16(bytes, ep + 2)
+            val fid = u16le(bytes, ep)
+            val fsz = u16le(bytes, ep + 2)
             if (fid == 0x0001 && ep + 4 + fsz <= extraEnd) {
               isZip64 = true
               var q = ep + 4
               val fEnd = ep + 4 + fsz
-              if (usize == 0xFFFFFFFFL && q + 8 <= fEnd) { usize = le64(bytes, q); q += 8 }
-              if (csize == 0xFFFFFFFFL && q + 8 <= fEnd) { csize = le64(bytes, q); q += 8 }
+              if (usize == 0xFFFFFFFFL && q + 8 <= fEnd) { usize = u64le(bytes, q); q += 8 }
+              if (csize == 0xFFFFFFFFL && q + 8 <= fEnd) { csize = u64le(bytes, q); q += 8 }
             }
             ep += 4 + fsz
           }
@@ -124,27 +119,14 @@ object ZipShard {
               }
             case 0 => done = true // stored + descriptor: boundary unknowable in stream order
             case 8 => // deflate (raw); descriptor entries learn sizes from the inflate
-              val inf = new Inflater(true)
-              inf.setInput(bytes, dataAt, bytes.length - dataAt)
-              val bo = new ByteArrayOutputStream()
-              val buf = new Array[Byte](64 << 10)
-              var bad = false
-              try {
-                while (!inf.finished() && !bad) {
-                  val m = inf.inflate(buf)
-                  if (m > 0) {
-                    if (bo.size.toLong + m > maxOutPerEntry || total + bo.size + m > maxOutTotal) bad = true
-                    else bo.write(buf, 0, m)
-                  } else if (!inf.finished()) bad = true // needsInput mid-stream = torn
-                }
-              } catch { case _: Exception => bad = true }
-              val consumed = inf.getBytesRead
-              inf.end()
-              if (bad) done = true
+              val inf = Bytes.inflate(bytes, dataAt, raw = true,
+                math.min(maxOutPerEntry, maxOutTotal - total))
+              if (inf == null) done = true
               else {
-                val data = bo.toByteArray
+                val data = inf.bytes
+                val consumed = inf.consumed
                 val c = new CRC32(); c.update(data)
-                var next = dataAt + consumed.toInt
+                var next = dataAt + consumed
                 var expectCrc = crc
                 var expectUsize = usize
                 if (hasDesc) {
@@ -159,11 +141,11 @@ object ZipShard {
                   val w = if (isZip64) 8 else 4
                   def descAt(p: Int): Boolean =
                     p + 4 + 2 * w <= bytes.length && leN(bytes, p + 4, isZip64) == consumed
-                  if (next + 4 <= bytes.length && le32(bytes, next) == DescSig &&
+                  if (next + 4 <= bytes.length && u32le(bytes, next) == DescSig &&
                     descAt(next + 4)) next += 4
                   if (!descAt(next)) done = true // neither layout consistent: torn
                   else {
-                    expectCrc = le32(bytes, next)
+                    expectCrc = u32le(bytes, next)
                     expectUsize = leN(bytes, next + 4 + w, isZip64)
                     next += 4 + 2 * w
                   }
@@ -237,17 +219,11 @@ object ZipShard {
   def zip(members: Seq[(String, Array[Byte])], deflate: Boolean = true,
       descriptor: Boolean = false, zip64: Boolean = false): Array[Byte] = {
     val out = new ByteArrayOutputStream()
-    def w16(v: Int): Unit = { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
-    def w32(v: Long): Unit = {
-      out.write((v & 0xFF).toInt); out.write(((v >> 8) & 0xFF).toInt)
-      out.write(((v >> 16) & 0xFF).toInt); out.write(((v >> 24) & 0xFF).toInt)
-    }
+    def w16(v: Int): Unit = out.write(Bytes.le(v, 2))
+    def w32(v: Long): Unit = out.write(Bytes.le(v, 4))
     val central = new ByteArrayOutputStream()
-    def c16(v: Int): Unit = { central.write(v & 0xFF); central.write((v >> 8) & 0xFF) }
-    def c32(v: Long): Unit = {
-      central.write((v & 0xFF).toInt); central.write(((v >> 8) & 0xFF).toInt)
-      central.write(((v >> 16) & 0xFF).toInt); central.write(((v >> 24) & 0xFF).toInt)
-    }
+    def c16(v: Int): Unit = central.write(Bytes.le(v, 2))
+    def c32(v: Long): Unit = central.write(Bytes.le(v, 4))
     for ((name, data) <- members) {
       val hdrOff = out.size()
       val nb = name.getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -255,26 +231,16 @@ object ZipShard {
       val method = if (deflate) 8 else 0
       val body: Array[Byte] =
         if (!deflate) data
-        else {
-          val d = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
-          d.setInput(data); d.finish()
-          val bo = new ByteArrayOutputStream()
-          val buf = new Array[Byte](8192)
-          while (!d.finished()) bo.write(buf, 0, d.deflate(buf))
-          d.end()
-          bo.toByteArray
-        }
+        else Bytes.deflate(data, raw = true)
       val flags = if (descriptor && deflate) 0x08 else 0
-      def w64(v: Long): Unit = { w32(v & 0xFFFFFFFFL); w32((v >> 32) & 0xFFFFFFFFL) }
+      def w64(v: Long): Unit = out.write(Bytes.le(v, 8))
       // zip64 extra field: usize then csize, 8 bytes each (zeros under
       // a descriptor — the trailing descriptor carries the real ones)
       val extra = new ByteArrayOutputStream()
       if (zip64) {
         extra.write(0x01); extra.write(0x00); extra.write(16); extra.write(0)
-        var v = if (flags != 0) 0L else data.length.toLong
-        for (_ <- 0 until 8) { extra.write((v & 0xFF).toInt); v >>= 8 }
-        var c = if (flags != 0) 0L else body.length.toLong
-        for (_ <- 0 until 8) { extra.write((c & 0xFF).toInt); c >>= 8 }
+        extra.write(Bytes.le(if (flags != 0) 0L else data.length.toLong, 8))
+        extra.write(Bytes.le(if (flags != 0) 0L else body.length.toLong, 8))
       }
       val eb = extra.toByteArray
       w32(LocalSig); w16(if (zip64) 45 else 20); w16(flags); w16(method); w16(0); w16(0)

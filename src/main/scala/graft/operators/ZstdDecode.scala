@@ -30,6 +30,8 @@ package graft.operators
   */
 object ZstdDecode {
 
+  import Bytes.{i32le, u16le, u24le, u32le, u64le}
+
   // --- bitstreams -----------------------------------------------------
 
   /** Backward bitstream (entropy payloads): bits are written LSB-first
@@ -60,10 +62,7 @@ object ZstdDecode {
       val base = from + (lo >> 3) // arithmetic shift: floor for lo < 0
       var w = 0L
       if (lo >= 0 && base + 8 <= to) {
-        w = (bytes(base) & 0xFFL) | (bytes(base + 1) & 0xFFL) << 8 |
-          (bytes(base + 2) & 0xFFL) << 16 | (bytes(base + 3) & 0xFFL) << 24 |
-          (bytes(base + 4) & 0xFFL) << 32 | (bytes(base + 5) & 0xFFL) << 40 |
-          (bytes(base + 6) & 0xFFL) << 48 | (bytes(base + 7) & 0xFFL) << 56
+        w = u64le(bytes, base)
       } else {
         var k = 7
         while (k >= 0) {
@@ -524,12 +523,9 @@ object ZstdDecode {
     */
   def parseDict(bytes: Array[Byte]): ZstdDict = try {
     if (bytes == null) return null
-    def le32(o: Int): Long =
-      (bytes(o) & 0xFFL) | (bytes(o + 1) & 0xFFL) << 8 |
-        (bytes(o + 2) & 0xFFL) << 16 | (bytes(o + 3) & 0xFFL) << 24
-    if (bytes.length < 8 || le32(0) != 0xEC30A437L)
+    if (bytes.length < 8 || u32le(bytes, 0) != 0xEC30A437L)
       return new ZstdDict(0L, null, null, null, null, null, bytes)
-    val id = le32(4)
+    val id = u32le(bytes, 4)
     var p = 8
     val hufR = readHufTable(bytes, p, bytes.length)
     if (hufR == null) return null
@@ -544,7 +540,7 @@ object ZstdDecode {
     if (llR == null) return null
     p += llR._2
     if (p + 12 > bytes.length) return null
-    val rep = Array(le32(p), le32(p + 4), le32(p + 8))
+    val rep = Array(u32le(bytes, p), u32le(bytes, p + 4), u32le(bytes, p + 8))
     p += 12
     if (rep.exists(_ <= 0L)) return null
     new ZstdDict(id, hufR._1, ofR._1, mlR._1, llR._1, rep,
@@ -566,12 +562,11 @@ object ZstdDecode {
       if ((sf & 1) == 0) { hdr = 1; rs = b0 >> 3 }
       else if (sf == 1) {
         if (from + 2 > to) return null
-        hdr = 2; rs = (b0 >> 4) | ((bytes(from + 1) & 0xFF) << 4)
+        hdr = 2; rs = u16le(bytes, from) >> 4
       } else {
         if (from + 3 > to) return null
         hdr = 3
-        rs = (b0 >> 4) | ((bytes(from + 1) & 0xFF) << 4) |
-          ((bytes(from + 2) & 0xFF) << 12)
+        rs = u24le(bytes, from) >> 4
       }
       if (rs > maxOut) return null
       if (ltype == 0) {
@@ -592,21 +587,18 @@ object ZstdDecode {
         case 0 | 1 =>
           if (from + 3 > to) return null
           hdr = 3
-          val h = b0 | ((bytes(from + 1) & 0xFF) << 8) | ((bytes(from + 2) & 0xFF) << 16)
+          val h = u24le(bytes, from)
           rs = (h >> 4) & 0x3FF; cs = (h >> 14) & 0x3FF
           streams4 = sf == 1
         case 2 =>
           if (from + 4 > to) return null
           hdr = 4
-          val h = b0 | ((bytes(from + 1) & 0xFF) << 8) |
-            ((bytes(from + 2) & 0xFF) << 16) | ((bytes(from + 3) & 0xFF) << 24)
+          val h = i32le(bytes, from)
           rs = (h >> 4) & 0x3FFF; cs = (h >>> 18) & 0x3FFF
         case _ =>
           if (from + 5 > to) return null
           hdr = 5
-          val h = (b0.toLong) | ((bytes(from + 1) & 0xFFL) << 8) |
-            ((bytes(from + 2) & 0xFFL) << 16) | ((bytes(from + 3) & 0xFFL) << 24) |
-            ((bytes(from + 4) & 0xFFL) << 32)
+          val h = u32le(bytes, from) | (bytes(from + 4) & 0xFFL) << 32
           rs = ((h >> 4) & 0x3FFFF).toInt; cs = ((h >> 22) & 0x3FFFF).toInt
       }
       if (rs > maxOut) return null
@@ -624,8 +616,7 @@ object ZstdDecode {
         if (!streams4) hufDecodeStream(t, bytes, p, end, rs)
         else {
           if (p + 6 > end || rs < 4) return null
-          def le16(o: Int) = (bytes(o) & 0xFF) | ((bytes(o + 1) & 0xFF) << 8)
-          val s1 = le16(p); val s2 = le16(p + 2); val s3 = le16(p + 4)
+          val s1 = u16le(bytes, p); val s2 = u16le(bytes, p + 2); val s3 = u16le(bytes, p + 4)
           val d1 = p + 6
           val d2 = d1 + s1
           val d3 = d2 + s2
@@ -662,7 +653,7 @@ object ZstdDecode {
       nbSeq = ((c0 - 128) << 8) | (bytes(p + 1) & 0xFF); p += 2
     } else {
       if (p + 3 > to) return false
-      nbSeq = ((bytes(p + 1) & 0xFF) | ((bytes(p + 2) & 0xFF) << 8)) + 0x7F00
+      nbSeq = u16le(bytes, p + 1) + 0x7F00
       p += 3
     }
     if (nbSeq == 0) {
@@ -782,10 +773,7 @@ object ZstdDecode {
   def decodeFrame(bytes: Array[Byte], off: Int,
       maxOut: Int = 64 << 20, dict: ZstdDict = null): (Array[Byte], Int) = try {
     if (bytes == null || off + 4 > bytes.length) return null
-    def le32(o: Int): Long =
-      (bytes(o) & 0xFFL) | (bytes(o + 1) & 0xFFL) << 8 |
-        (bytes(o + 2) & 0xFFL) << 16 | (bytes(o + 3) & 0xFFL) << 24
-    if (le32(off) != 0xFD2FB528L) return null
+    if (u32le(bytes, off) != 0xFD2FB528L) return null
     var p = off + 4
     if (p >= bytes.length) return null
     val fhd = bytes(p) & 0xFF; p += 1
@@ -819,9 +807,9 @@ object ZstdDecode {
       if (p + fcsLen > bytes.length) return null
       fcs = fcsLen match {
         case 1 => bytes(p) & 0xFFL
-        case 2 => ((bytes(p) & 0xFFL) | (bytes(p + 1) & 0xFFL) << 8) + 256L
-        case 4 => le32(p)
-        case _ => le32(p) | le32(p + 4) << 32
+        case 2 => u16le(bytes, p) + 256L
+        case 4 => u32le(bytes, p)
+        case _ => u64le(bytes, p)
       }
       p += fcsLen
       // an 8-byte FCS with bit 63 set parses negative — a declared frame
@@ -842,8 +830,7 @@ object ZstdDecode {
     var last = false
     while (!last) {
       if (p + 3 > bytes.length) return null
-      val hdr = (bytes(p) & 0xFF) | ((bytes(p + 1) & 0xFF) << 8) |
-        ((bytes(p + 2) & 0xFF) << 16)
+      val hdr = u24le(bytes, p)
       p += 3
       last = (hdr & 1) == 1
       val btype = (hdr >>> 1) & 3
@@ -869,7 +856,7 @@ object ZstdDecode {
     val data = out.toArray
     if (hasCk) {
       if (p + 4 > bytes.length) return null
-      val want = le32(p)
+      val want = u32le(bytes, p)
       p += 4
       val got = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
         data, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
@@ -914,19 +901,15 @@ object ZstdDecode {
       maxOutPerFrame: Int = 64 << 20,
       maxOutTotal: Long = 256L << 20): Seq[Array[Byte]] = {
     if (bytes == null || bytes.length < 8) return Nil
-    def le32(o: Int): Long =
-      (bytes(o) & 0xFFL) | (bytes(o + 1) & 0xFFL) << 8 |
-        (bytes(o + 2) & 0xFFL) << 16 | (bytes(o + 3) & 0xFFL) << 24
-    if (le32(0) != 0x184D2A5DL)
+    if (u32le(bytes, 0) != 0x184D2A5DL)
       return zstdMembers(bytes, maxOutPerFrame, maxOutTotal)
-    val sz = le32(4)
+    val sz = u32le(bytes, 4)
     if (8 + sz > bytes.length) return Nil
     val raw = java.util.Arrays.copyOfRange(bytes, 8, (8 + sz).toInt)
     // the embedded dictionary may itself be zstd-compressed
     val dictBytes =
       if (raw.length >= 4 &&
-        ((raw(0) & 0xFFL) | (raw(1) & 0xFFL) << 8 |
-          (raw(2) & 0xFFL) << 16 | (raw(3) & 0xFFL) << 24) == 0xFD2FB528L) {
+        u32le(raw, 0) == 0xFD2FB528L) {
         val r = decodeFrame(raw, 0, maxOutPerFrame)
         if (r == null) return Nil
         r._1
@@ -967,18 +950,15 @@ object ZstdDecode {
       data, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
       data.length, 0L) & 0xFFFFFFFFL
 
-  private def leBytes(v: Long, n: Int): Array[Byte] =
-    (0 until n).map(k => ((v >>> (8 * k)) & 0xFF).toByte).toArray
-
   /** Single-segment frame header + FCS for `len` content bytes. */
   private def frameHead(len: Long, checksum: Boolean): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    out.write(leBytes(0xFD2FB528L, 4), 0, 4)
+    out.write(Bytes.le(0xFD2FB528L, 4))
     val ck = if (checksum) 0x04 else 0
     if (len < 256) { out.write(0x20 | ck); out.write(len.toInt) }
     else if (len < 65536 + 256) {
-      out.write(0x60 | ck); out.write(leBytes(len - 256, 2), 0, 2)
-    } else { out.write(0xA0 | ck); out.write(leBytes(len, 4), 0, 4) }
+      out.write(0x60 | ck); out.write(Bytes.le(len - 256, 2))
+    } else { out.write(0xA0 | ck); out.write(Bytes.le(len, 4)) }
     out.toByteArray
   }
 
@@ -994,11 +974,11 @@ object ZstdDecode {
       first = false
       val n = math.min(blockSize, data.length - off)
       val last = if (off + n >= data.length) 1 else 0
-      out.write(leBytes((n.toLong << 3) | last, 3), 0, 3)
+      out.write(Bytes.le((n.toLong << 3) | last, 3))
       out.write(data, off, n)
       off += n
     }
-    if (checksum) out.write(leBytes(xxh32(data), 4), 0, 4)
+    if (checksum) out.write(Bytes.le(xxh32(data), 4))
     out.toByteArray
   }
 
@@ -1010,9 +990,9 @@ object ZstdDecode {
     val out = new java.io.ByteArrayOutputStream()
     val h = frameHead(n.toLong, checksum)
     out.write(h, 0, h.length)
-    out.write(leBytes((n.toLong << 3) | 2L | 1L, 3), 0, 3) // last, RLE
+    out.write(Bytes.le((n.toLong << 3) | 2L | 1L, 3)) // last, RLE
     out.write(b)
-    if (checksum) out.write(leBytes(xxh32(data), 4), 0, 4)
+    if (checksum) out.write(Bytes.le(xxh32(data), 4))
     out.toByteArray
   }
 
@@ -1226,7 +1206,7 @@ object ZstdDecode {
     require(rs < 1024 && cs < 1024)
     val block = new java.io.ByteArrayOutputStream()
     val lh = 2 | (0 << 2) | (rs << 4) | (cs << 14) // Compressed, sf0 1-stream
-    block.write(lh & 0xFF); block.write((lh >> 8) & 0xFF); block.write((lh >> 16) & 0xFF)
+    block.write(Bytes.le(lh, 3))
     val tb = tree.toByteArray
     block.write(tb, 0, tb.length)
     block.write(litStream, 0, litStream.length)
@@ -1289,9 +1269,9 @@ object ZstdDecode {
     val out = new java.io.ByteArrayOutputStream()
     val fh = frameHead(decoded.length.toLong, checksum)
     out.write(fh, 0, fh.length)
-    out.write(leBytes((body.length.toLong << 3) | (2L << 1) | 1L, 3), 0, 3)
+    out.write(Bytes.le((body.length.toLong << 3) | (2L << 1) | 1L, 3))
     out.write(body, 0, body.length)
-    if (checksum) out.write(leBytes(xxh32(decoded), 4), 0, 4)
+    if (checksum) out.write(Bytes.le(xxh32(decoded), 4))
     out.toByteArray
   }
 
@@ -1332,9 +1312,9 @@ object ZstdDecode {
     val out = new java.io.ByteArrayOutputStream()
     val h = frameHead(decoded.length.toLong, checksum)
     out.write(h, 0, h.length)
-    out.write(leBytes((body.length.toLong << 3) | (2L << 1) | 1L, 3), 0, 3)
+    out.write(Bytes.le((body.length.toLong << 3) | (2L << 1) | 1L, 3))
     out.write(body, 0, body.length)
-    if (checksum) out.write(leBytes(xxh32(decoded), 4), 0, 4)
+    if (checksum) out.write(Bytes.le(xxh32(decoded), 4))
     out.toByteArray
   }
 
@@ -1373,9 +1353,9 @@ object ZstdDecode {
     val out = new java.io.ByteArrayOutputStream()
     val h = frameHead(decoded.length.toLong, checksum)
     out.write(h, 0, h.length)
-    out.write(leBytes((body.length.toLong << 3) | (2L << 1) | 1L, 3), 0, 3)
+    out.write(Bytes.le((body.length.toLong << 3) | (2L << 1) | 1L, 3))
     out.write(body, 0, body.length)
-    if (checksum) out.write(leBytes(xxh32(decoded), 4), 0, 4)
+    if (checksum) out.write(Bytes.le(xxh32(decoded), 4))
     out.toByteArray
   }
 
@@ -1385,8 +1365,8 @@ object ZstdDecode {
     */
   def dictFrame(dictBytes: Array[Byte]): Array[Byte] = {
     val out = new java.io.ByteArrayOutputStream()
-    out.write(leBytes(0x184D2A5DL, 4), 0, 4)
-    out.write(leBytes(dictBytes.length.toLong, 4), 0, 4)
+    out.write(Bytes.le(0x184D2A5DL, 4))
+    out.write(Bytes.le(dictBytes.length.toLong, 4))
     out.write(dictBytes, 0, dictBytes.length)
     out.toByteArray
   }
@@ -1434,9 +1414,9 @@ object ZstdDecode {
         java.util.Arrays.copyOfRange(text, r3, 2 * r3),
         java.util.Arrays.copyOfRange(text, 2 * r3, 3 * r3),
         java.util.Arrays.copyOfRange(text, 3 * r3, text.length)).map(stream)
-      streams.write(leBytes(parts(0).length.toLong, 2), 0, 2)
-      streams.write(leBytes(parts(1).length.toLong, 2), 0, 2)
-      streams.write(leBytes(parts(2).length.toLong, 2), 0, 2)
+      streams.write(Bytes.le(parts(0).length.toLong, 2))
+      streams.write(Bytes.le(parts(1).length.toLong, 2))
+      streams.write(Bytes.le(parts(2).length.toLong, 2))
       parts.foreach(p => streams.write(p, 0, p.length))
     }
     val cs = tree.length + streams.size()
@@ -1448,7 +1428,7 @@ object ZstdDecode {
     if (!fourStream) {
       require(rs < 1024 && cs < 1024)
       val h = 2 | (0 << 2) | (rs << 4) | (cs << 14)
-      block.write(h & 0xFF); block.write((h >> 8) & 0xFF); block.write((h >> 16) & 0xFF)
+      block.write(Bytes.le(h, 3))
     } else {
       val h = (2L | (2L << 2) | (rs.toLong << 4) | (cs.toLong << 18))
       block.write((h & 0xFF).toInt); block.write(((h >> 8) & 0xFF).toInt)
@@ -1462,9 +1442,9 @@ object ZstdDecode {
     val out = new java.io.ByteArrayOutputStream()
     val fh = frameHead(text.length.toLong, checksum)
     out.write(fh, 0, fh.length)
-    out.write(leBytes((body.length.toLong << 3) | (2L << 1) | 1L, 3), 0, 3)
+    out.write(Bytes.le((body.length.toLong << 3) | (2L << 1) | 1L, 3))
     out.write(body, 0, body.length)
-    if (checksum) out.write(leBytes(xxh32(text), 4), 0, 4)
+    if (checksum) out.write(Bytes.le(xxh32(text), 4))
     out.toByteArray
   }
 
@@ -1476,8 +1456,7 @@ object ZstdDecode {
     var total = 0L
     var stop = false
     while (!stop && i + 4 <= bytes.length) {
-      val magic = (bytes(i) & 0xFFL) | (bytes(i + 1) & 0xFFL) << 8 |
-        (bytes(i + 2) & 0xFFL) << 16 | (bytes(i + 3) & 0xFFL) << 24
+      val magic = u32le(bytes, i)
       if (magic == 0xFD2FB528L) {
         val r = decodeFrame(bytes, i, maxOutPerFrame, dict)
         if (r == null) stop = true
@@ -1489,8 +1468,7 @@ object ZstdDecode {
       } else if ((magic & 0xFFFFFFF0L) == 0x184D2A50L) {
         if (i + 8 > bytes.length) stop = true
         else {
-          val sz = (bytes(i + 4) & 0xFFL) | (bytes(i + 5) & 0xFFL) << 8 |
-            (bytes(i + 6) & 0xFFL) << 16 | (bytes(i + 7) & 0xFFL) << 24
+          val sz = u32le(bytes, i + 4)
           if (i + 8 + sz > bytes.length) stop = true
           else { i += (8 + sz).toInt }
         }

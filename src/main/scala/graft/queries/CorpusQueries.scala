@@ -5893,7 +5893,7 @@ object CorpusQueries {
     // The .warc.gz INGEST — the layout Common Crawl actually ships:
     // ONE gzip member PER RECORD, which a whole-file gunzip silently
     // flattens into boundary-less text. recordsGz splits each blob
-    // into its members (raw-Inflater loop — RFC 1952 has no length
+    // into its members (bounded raw inflate — RFC 1952 has no length
     // field, so the member extent is only knowable BY inflating —
     // with CRC32 + ISIZE verified per member and a bomb cap), parses
     // each member as WARC, and re-indexes rec_idx across members so

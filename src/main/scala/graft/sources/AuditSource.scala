@@ -53,14 +53,9 @@ object AuditSource {
       .option("recursiveFileLookup", "true")
       .load(path)
 
-  /** Hive-partitioned (`dt=YYYYMMDD`) variants: partition pruning does the
-    * directory skipping that DateFileFilter hand-implements.
+  /** Hive-partitioned (`dt=YYYYMMDD`) batch read: partition pruning does
+    * the directory skipping that DateFileFilter hand-implements.
     */
-  def streamPartitioned(spark: SparkSession, path: String, minDate: Option[String]): DataFrame = {
-    val df = spark.readStream.format("text").load(path)
-    applyMinDate(df, minDate)
-  }
-
   def batchPartitioned(spark: SparkSession, path: String, minDate: Option[String]): DataFrame =
     applyMinDate(spark.read.format("text").load(path), minDate)
 

@@ -159,6 +159,10 @@ class FunctionsSpec extends SparkSpec {
     // blob (all-or-nothing under the one-column contract)
     val tornTail = gz("first member ") ++ gz("second ").dropRight(6)
     assert(GraftMath.gunzipUtf8(tornTail) == null)
+    // bytes AFTER a valid last member are malformation too: a lenient
+    // gunzip skips them and returns the text
+    assert(GraftMath.gunzipUtf8(gz("the payload") ++ "junk".getBytes("UTF-8")) == null)
+    assert(GraftMath.gunzipUtf8(gz("the payload") ++ new Array[Byte](12)) == null)
   }
 
   test("NfcNormalize agrees with the standard on composed/decomposed/singleton forms") {
